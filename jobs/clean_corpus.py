@@ -49,28 +49,13 @@ def run(spark, docs, dst: str, min_quality: float = 0.5,
 
     from ocr_pytorch_spark.operators import dedup as D
     from ocr_pytorch_spark.operators import text as T
-    from ocr_pytorch_spark.plans.lineage import (committed_buckets,
-                                                 run_bucketed_write)
+    from ocr_pytorch_spark.plans import lineage as L
 
     # short-circuit a fully-committed destination before paying any
     # corpus-global recompute
-    if resume and len(committed_buckets(spark, dst)) >= buckets:
-        # Fully committed: return the SAME key set as the normal path
-        # (r7 ADVICE) — input/dedup counts come from the committed
-        # run's _stats when readable so callers don't mistake the
-        # short-circuit for an empty corpus; wall_ms: 0 marks it.
-        prior: dict = {}
-        try:
-            row = spark.read.parquet(
-                os.path.join(dst, "_stats")).first()
-            if row is not None:
-                prior = row.asDict()
-        except Exception:
-            pass
-        return {"input": int(prior.get("input", 0)),
-                "dedup+filter": int(prior.get("dedup+filter", 0)),
-                "buckets_total": buckets, "buckets_skipped": buckets,
-                "docs_processed": 0, "wall_ms": 0}
+    if resume and (prior := L.committed_run(
+            spark, dst, buckets, ("input", "dedup+filter"))) is not None:
+        return prior
 
     n_in = docs.count()
 
@@ -104,16 +89,12 @@ def run(spark, docs, dst: str, min_quality: float = 0.5,
         cleaned = cleaned.where(h < cut)
 
     out = cleaned.select("doc_id", "text", "quality", "lang_pred")
-    commit = run_bucketed_write(spark, out, dst, buckets=buckets,
-                                resume=resume, stage="clean_corpus",
-                                payload_col="text")
+    commit = L.run_bucketed_write(spark, out, dst, buckets=buckets,
+                                  resume=resume, stage="clean_corpus",
+                                  payload_col="text")
     stats = {"input": n_in, "dedup+filter": n_dedup_filtered}
     stats.update(commit)
-    (spark.createDataFrame([tuple(stats.values())],
-                           schema=", ".join(f"`{k}` long"
-                                            for k in stats))
-        .write.mode("overwrite")
-        .parquet(os.path.join(dst, "_stats")))
+    L.write_stats(spark, dst, stats)
     return stats
 
 

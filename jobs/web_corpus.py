@@ -65,16 +65,14 @@ def run(spark, docs, dst: str, max_dup_word_frac: float = 0.6,
     from ocr_pytorch_spark.operators import html as H
     from ocr_pytorch_spark.operators import text as T
     from ocr_pytorch_spark.operators import web as WB
-    from ocr_pytorch_spark.plans.lineage import (committed_buckets,
-                                                 run_bucketed_write)
+    from ocr_pytorch_spark.plans import lineage as L
 
     # short-circuit a fully-committed destination before paying any
     # corpus-global recompute
-    if resume and len(committed_buckets(spark, dst)) >= buckets:
-        return {"docs_in": 0, "after_repetition_gate": 0,
-                "after_quality_gate": 0, "after_line_dedup": 0,
-                "after_decontam": 0, "buckets_total": buckets,
-                "buckets_skipped": buckets, "docs_processed": 0}
+    if resume and (prior := L.committed_run(spark, dst, buckets, (
+            "docs_in", "after_repetition_gate", "after_quality_gate",
+            "after_line_dedup", "after_decontam"))) is not None:
+        return prior
 
     n_in = docs.count()
 
@@ -117,19 +115,16 @@ def run(spark, docs, dst: str, max_dup_word_frac: float = 0.6,
 
     # bucketed lineage commit: committed buckets skipped, pending ones
     # dynamic-overwritten, _lineage/_metrics appended post-write
-    commit = run_bucketed_write(spark, cleaned, dst, buckets=buckets,
-                                resume=resume, stage="web_corpus",
-                                data_subdir="web_corpus",
-                                payload_col="text")
+    commit = L.run_bucketed_write(spark, cleaned, dst, buckets=buckets,
+                                  resume=resume, stage="web_corpus",
+                                  data_subdir="web_corpus",
+                                  payload_col="text")
     stats = {"docs_in": n_in, "after_repetition_gate": n_gated,
              "after_quality_gate": n_quality,
              "after_line_dedup": n_dedup,
              "after_decontam": n_clean}
     stats.update(commit)
-    (spark.createDataFrame([tuple(stats.values())],
-                           schema=", ".join(f"{k} long" for k in stats))
-        .write.mode("overwrite")
-        .parquet(os.path.join(dst, "_stats")))
+    L.write_stats(spark, dst, stats)
     return stats
 
 

@@ -31,8 +31,8 @@ Scale properties (the 100 TB story, SURVEY.md §4.3):
 
 The per-image compute — reference semantics of ocr.py:73-78 — runs in an
 iterator-form ``mapInPandas`` UDF: model weights deserialize once per
-python worker (broadcast + module cache), each Arrow batch carries
-``images_per_batch`` raw-RGB rows, and within a batch images are
+python worker (shipped .npz files + module cache), each Arrow batch
+carries ``images_per_batch`` raw-RGB rows, and within a batch images are
 processed by shared NumPy kernels (never per-row Python at the Spark
 level; the per-row loop below is over in-batch numpy arrays, which is
 the Arrow-vectorized pattern the input_hint mandates).
@@ -43,15 +43,15 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ocr_pytorch_spark.config import PipelineConfig
 
-# one cached weight pair per python worker process, keyed by a token that
-# is STABLE ACROSS TASKS (file paths / driver-generated uuid) — the whole
-# point is that a reused worker deserializes the ~100 MB of weights once,
-# not once per task (executor-local singleton, the Spark analogue of the
-# reference's module-global model load at ocr.py:6)
+# one cached weight pair per python worker process, keyed by the .npz
+# paths, which are STABLE ACROSS TASKS — the whole point is that a
+# reused worker deserializes the ~100 MB of weights once, not once per
+# task (executor-local singleton, the Spark analogue of the reference's
+# module-global model load at ocr.py:6)
 _WORKER_CACHE: dict[tuple, tuple[dict, dict]] = {}
 
 OCR_OUT_SCHEMA = "media_ref string, box_order int, text string"
@@ -75,25 +75,19 @@ def _resolve_path(path: str) -> str:
     return SparkFiles.get(os.path.basename(path))
 
 
-def _get_weights(spec) -> tuple[dict, dict]:
-    if isinstance(spec, dict) and spec.get("kind") == "files":
-        key = ("files", spec["ctpn"], spec["crnn"])
-        if key not in _WORKER_CACHE:
-            import numpy as np
+def _get_weights(spec: dict) -> tuple[dict, dict]:
+    """The weight pair of a ``file_weights_spec``, loaded once per
+    python worker."""
+    key = (spec["ctpn"], spec["crnn"])
+    if key not in _WORKER_CACHE:
+        import numpy as np
 
-            def load(p):
-                with np.load(_resolve_path(p)) as z:
-                    return {k: z[k] for k in z.files}
+        def load(p):
+            with np.load(_resolve_path(p)) as z:
+                return {k: z[k] for k in z.files}
 
-            _WORKER_CACHE[key] = (load(spec["ctpn"]), load(spec["crnn"]))
-        return _WORKER_CACHE[key]
-    if isinstance(spec, dict) and spec.get("kind") == "broadcast":
-        key = ("bc", spec["token"])
-        if key not in _WORKER_CACHE:
-            _WORKER_CACHE[key] = spec["bc"].value
-        return _WORKER_CACHE[key]
-    # bare Broadcast (back-compat): no stable token -> per-task fetch
-    return spec.value
+        _WORKER_CACHE[key] = (load(spec["ctpn"]), load(spec["crnn"]))
+    return _WORKER_CACHE[key]
 
 
 def make_ocr_udf(weights_spec, cfg: PipelineConfig, timing_acc=None):
@@ -189,17 +183,6 @@ def file_weights_spec(ctpn_path: str | None = None,
     return {"kind": "files",
             "ctpn": ctpn_path or os.path.join(d, "ctpn.npz"),
             "crnn": crnn_path or os.path.join(d, "crnn.npz")}
-
-
-def broadcast_weights(spark: SparkSession, ctpn_w: dict, crnn_w: dict):
-    """Alternative shipping mechanism: sc.broadcast with a driver-minted
-    token so reused workers deserialize once (executor-local singleton —
-    the Spark analogue of the reference's module-global model load,
-    ocr.py:6)."""
-    import uuid
-
-    return {"kind": "broadcast", "token": uuid.uuid4().hex,
-            "bc": spark.sparkContext.broadcast((ctpn_w, crnn_w))}
 
 
 def explode_spans(documents: DataFrame) -> DataFrame:

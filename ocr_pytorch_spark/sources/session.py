@@ -10,6 +10,20 @@ from __future__ import annotations
 
 import os
 
+MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def _default_driver_mem() -> str:
+    """min(48g, a quarter of the host's RAM): a heap sized past what the
+    host holds lets the driver JVM grow until the kernel OOM-kills it."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(MAX_DRIVER_MEM_MB, kb // 4096)}m"
+
 
 def get_spark(app: str = "ocr_pytorch_spark", cpus: str | None = None,
               shuffle_partitions: int | None = None,
@@ -44,7 +58,8 @@ def get_spark(app: str = "ocr_pytorch_spark", cpus: str | None = None,
                 str(arrow_batch))
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         # keep [Stage N:===>] spam off stdout — bench.py prints ONE
         # machine-parsed JSON line and progress bars drowned it in r4

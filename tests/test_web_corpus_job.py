@@ -115,3 +115,4 @@ def test_web_corpus_resume_idempotent(spark, tmp_path_factory):
     s3 = run(spark, docs, dst, min_words=4, buckets=buckets)
     assert s3["docs_processed"] == 0
     assert s3["buckets_skipped"] == buckets
+    assert s3["docs_in"] == 40
