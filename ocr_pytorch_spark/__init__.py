@@ -8,8 +8,8 @@ over Iceberg/Parquet tables of interleaved text+media documents:
   DataFrame API, optimized by Catalyst/AQE;
 * the compute kernels (VGG16+BiGRU CTPN forward, CRNN BiLSTM forward,
   anchor decode, NMS, text-line connection, CTC collapse) = deterministic
-  NumPy inside Arrow-vectorized ``mapInPandas`` UDFs, weights broadcast
-  once per executor;
+  NumPy inside Arrow-vectorized ``mapInPandas`` UDFs, weights shipped as
+  ``.npz`` files and loaded once per python worker;
 * a single-process oracle (``ocr_pytorch_spark.oracle``) that is the
   correctness ground truth — the Spark pipeline must reproduce its span
   sequence ``(kind, text, media_ref, order)`` exactly.

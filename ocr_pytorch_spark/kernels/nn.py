@@ -284,29 +284,6 @@ def maxpool2d(x: np.ndarray, kernel, stride=None, padding=0) -> np.ndarray:
     return out
 
 
-def avgpool2d(x: np.ndarray, kernel, stride=None,
-              padding=0) -> np.ndarray:
-    """Average pool, NCHW, torch AvgPool2d defaults (ceil_mode=False,
-    count_include_pad=True: zero pad cells count in the divisor)."""
-    kh, kw = _pair(kernel)
-    sh, sw = _pair(stride if stride is not None else kernel)
-    ph, pw = _pair(padding)
-    if ph or pw:
-        x = np.pad(x, ((0, 0), (0, 0), (ph, ph), (pw, pw)),
-                   constant_values=0.0)
-    B, C, H, W = x.shape
-    oh = (H - kh) // sh + 1
-    ow = (W - kw) // sw + 1
-    s = x.strides
-    win = as_strided(
-        x,
-        shape=(B, C, oh, ow, kh, kw),
-        strides=(s[0], s[1], s[2] * sh, s[3] * sw, s[2], s[3]),
-        writeable=False,
-    )
-    return win.mean(axis=(4, 5))
-
-
 def relu(x: np.ndarray) -> np.ndarray:
     return np.maximum(x, 0.0)
 

@@ -25,7 +25,6 @@ from ocr_pytorch_spark import config as C
 from ocr_pytorch_spark.kernels import (
     bigru, conv2d, maxpool2d, resize_area, softmax,
 )
-from ocr_pytorch_spark.kernels.nn import relu_
 
 # torchvision vgg16 features[:-1] conv layer indices and channel plan
 # (detect/ctpn_model.py:92-94).
@@ -38,11 +37,9 @@ _VGG_LAYERS = (
 )
 
 
-def ctpn_forward(x: np.ndarray, w: dict, return_features: bool = False):
+def ctpn_forward(x: np.ndarray, w: dict):
     """x: (1,3,H,W) float32 mean-subtracted -> (cls, regr) each (1,N,2),
-    N = (H/16)*(W/16)*10 in h,w,k order (detect/ctpn_model.py:101-128).
-    return_features additionally yields the shared lstm_fc feature map
-    (consumed by the v2 side-refinement head, models/variants.py)."""
+    N = (H/16)*(W/16)*10 in h,w,k order (detect/ctpn_model.py:101-128)."""
     for layer in _VGG_LAYERS:
         if layer[0] == "pool":
             x = maxpool2d(x, 2, 2)
@@ -65,8 +62,6 @@ def ctpn_forward(x: np.ndarray, w: dict, return_features: bool = False):
                   w["rpn_regress.conv.bias"])
     cls = cls.transpose(0, 2, 3, 1).reshape(b, h * wd * 10, 2)
     regr = regr.transpose(0, 2, 3, 1).reshape(b, h * wd * 10, 2)
-    if return_features:
-        return cls, regr, x3
     return cls, regr
 
 
@@ -292,12 +287,9 @@ def get_text_lines(proposals: np.ndarray, scores: np.ndarray,
     return text_recs
 
 
-def get_det_boxes(image: np.ndarray, weights: dict,
-                  cfg: C.PipelineConfig, return_anchors: bool = False):
+def get_det_boxes(image: np.ndarray, weights: dict, cfg: C.PipelineConfig):
     """Full detection for one (H,W,3) uint8 image -> ((M,9) quads,
-    resized image). Mirrors detect/ctpn_predict.py:38-111 minus drawing;
-    return_anchors also yields the kept proposal anchors the framed
-    sink (K2, kernels/draw.py) composites."""
+    resized image). Mirrors detect/ctpn_predict.py:38-111 minus drawing."""
     h0, w0 = image.shape[:2]
     r = cfg.detect_height / float(h0)
     image = resize_area(image, cfg.detect_height, int(w0 * r))
@@ -318,10 +310,7 @@ def get_det_boxes(image: np.ndarray, weights: dict,
     select_anchor = select_anchor[keep_index]
     select_score = select_score[keep_index].reshape(-1, 1)
     if select_anchor.shape[0] == 0:
-        empty = np.zeros((0, 9), dtype=np.float64)
-        if return_anchors:
-            return empty, image, select_anchor
-        return empty, image
+        return np.zeros((0, 9), dtype=np.float64), image
     nmsbox = np.hstack([select_anchor.astype(np.float64), select_score])
     keep = nms(nmsbox, cfg.nms_thresh)
     select_anchor = select_anchor[keep]
@@ -335,6 +324,4 @@ def get_det_boxes(image: np.ndarray, weights: dict,
             text[idx][2] = min(text[idx][2] + C.EXPAND_X, w - 1)
             text[idx][4] = max(text[idx][4] - C.EXPAND_X, 0)
             text[idx][6] = min(text[idx][6] + C.EXPAND_X, w - 1)
-    if return_anchors:
-        return text, image, select_anchor
     return text, image

@@ -32,7 +32,8 @@ Scale properties (the 100 TB story, SURVEY.md §4.3):
 The per-image compute — reference semantics of ocr.py:73-78 — runs in an
 iterator-form ``mapInPandas`` UDF: model weights deserialize once per
 python worker (shipped .npz files + module cache), each Arrow batch
-carries ``images_per_batch`` raw-RGB rows, and within a batch images are
+carries up to ``spark.sql.execution.arrow.maxRecordsPerBatch`` raw-RGB
+rows (``get_spark(arrow_batch=)``), and within a batch images are
 processed by shared NumPy kernels (never per-row Python at the Spark
 level; the per-row loop below is over in-batch numpy arrays, which is
 the Arrow-vectorized pattern the input_hint mandates).
@@ -180,8 +181,7 @@ def file_weights_spec(ctpn_path: str | None = None,
     from ocr_pytorch_spark.models.weights import weights_dir
 
     d = weights_dir()
-    return {"kind": "files",
-            "ctpn": ctpn_path or os.path.join(d, "ctpn.npz"),
+    return {"ctpn": ctpn_path or os.path.join(d, "ctpn.npz"),
             "crnn": crnn_path or os.path.join(d, "crnn.npz")}
 
 

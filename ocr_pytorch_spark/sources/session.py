@@ -61,8 +61,8 @@ def get_spark(app: str = "ocr_pytorch_spark", cpus: str | None = None,
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM")
                 or _default_driver_mem())
         .config("spark.ui.enabled", "false")
-        # keep [Stage N:===>] spam off stdout — bench.py prints ONE
-        # machine-parsed JSON line and progress bars drowned it in r4
+        # keep [Stage N:===>] progress bars off stdout, where callers
+        # such as perfbench/run.py print machine-parsed JSON lines
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")

@@ -1,32 +1,20 @@
-"""End-to-end checkpoint + fine-tune integration (r4 VERDICT tasks
-7-8).
+"""End-to-end checkpoint integration.
 
-Task 7: a synthesized LEGACY-format torch .pth (the pre-1.6 layout the
+A synthesized LEGACY-format torch .pth (the pre-1.6 layout the
 reference's pretrained checkpoints ship in, ref README "checkpoints")
 is converted by models/checkpoint.pth_to_npz and fed through the REAL
 Spark extraction pipeline; spans must equal the single-process oracle
 loading the same converted .npz — proving a user can drop their .pth
 straight into the engine with no torch installed.
-
-Task 8: three distributed fine-tuning epochs (broadcast weights +
-treeAggregate mean gradients) update the CTPN weights, the updated
-weights are written to .npz, and pipeline==oracle span parity must
-STILL hold — parity is weight-agnostic, not an artifact of the
-bundled seed-42 weights.
 """
 
-import os
 from collections import OrderedDict
 
-import numpy as np
 import pytest
 
 from ocr_pytorch_spark import datagen, oracle
-from ocr_pytorch_spark.models import distributed_training as DT
-from ocr_pytorch_spark.models import weights as W
 from ocr_pytorch_spark.models.checkpoint import pth_to_npz
-from ocr_pytorch_spark.models.training import SGD
-from ocr_pytorch_spark.models.weights import load_npz, save_npz
+from ocr_pytorch_spark.models.weights import load_npz
 from ocr_pytorch_spark.operators import extract as EX
 
 # reuse the torch-free .pth writer + fake-torch fixture
@@ -88,44 +76,3 @@ def test_legacy_pth_to_spark_parity(fake_torch, spark,  # noqa: F811
     spec = EX.file_weights_spec(ctpn_npz, crnn_npz)
     _assert_pipeline_matches_oracle(spark, fixture_tables, spec,
                                     ctpn_npz, crnn_npz, fixture_cfg)
-
-
-def test_finetune_then_extract_parity(spark, fixture_tables,
-                                      bundled_weights, fixture_cfg,
-                                      tmp_path):
-    """3 distributed epochs update the real CTPN weights; the
-    extraction pipeline + oracle must still agree under the NEW
-    weights."""
-    ctpn_w, _ = bundled_weights
-    params0 = {k: np.asarray(v, dtype=np.float64)
-               for k, v in ctpn_w.items()}
-
-    rng = np.random.default_rng(47)
-    samples = []
-    for _ in range(4):
-        x = rng.standard_normal((1, 3, 32, 32))
-        n_anchors = (32 // 16) * (32 // 16) * 10
-        gt_cls = rng.choice([-1, 0, 1], size=n_anchors,
-                            p=[0.3, 0.5, 0.2]).astype(np.float64)
-        gt_regr = np.zeros((n_anchors, 3))
-        gt_regr[:, 0] = gt_cls
-        gt_regr[:, 1:] = rng.standard_normal((n_anchors, 2))
-        samples.append((x, gt_cls, gt_regr))
-
-    out = DT.train_ctpn_distributed(
-        spark, samples, params0, SGD(momentum=0.9),
-        epochs=3, lr0=1e-4, total_num=30)
-    assert len(out["epoch_losses"]) == 3
-    assert out["epoch_losses"][-1][2] < out["epoch_losses"][0][2]
-    moved = sum(
-        float(np.abs(out["params"][k] - params0[k]).max())
-        for k in params0)
-    assert moved > 0.0  # the optimizer actually stepped
-
-    tuned_npz = str(tmp_path / "ctpn_tuned.npz")
-    save_npz(tuned_npz, {k: v.astype(np.float32)
-                         for k, v in out["params"].items()})
-    crnn_npz = os.path.join(W.weights_dir(), "crnn.npz")
-    spec = EX.file_weights_spec(tuned_npz, crnn_npz)
-    _assert_pipeline_matches_oracle(spark, fixture_tables, spec,
-                                    tuned_npz, crnn_npz, fixture_cfg)

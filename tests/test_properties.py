@@ -119,43 +119,6 @@ def test_viral_duplicate_bucket_cap(spark):
     assert [(r["doc_a"], r["doc_b"]) for r in got] == [(n + 1, n + 2)]
 
 
-def test_ctc_loss_matches_enumeration_property():
-    """Property: for random small (T, nclass) tables and targets, the
-    DP forward loss equals brute-force path enumeration."""
-    import itertools
-
-    import numpy as np
-    from hypothesis import given, settings, strategies as st
-
-    from ocr_pytorch_spark.models.losses import ctc_loss
-
-    @settings(max_examples=30, deadline=None)
-    @given(st.integers(2, 4), st.integers(2, 3),
-           st.lists(st.integers(1, 2), min_size=1, max_size=2),
-           st.integers(0, 10_000))
-    def check(T, extra, target, seed):
-        nclass = 3
-        rng = np.random.default_rng(seed)
-        logits = rng.normal(size=(T, nclass))
-        e = np.exp(logits - logits.max(axis=1, keepdims=True))
-        logp = np.log(e / e.sum(axis=1, keepdims=True))
-        total = 0.0
-        for path in itertools.product(range(nclass), repeat=T):
-            collapsed, prev = [], 0
-            for s in path:
-                if s != 0 and s != prev:
-                    collapsed.append(s)
-                prev = s
-            if collapsed == target:
-                total += np.exp(sum(logp[t, s]
-                                    for t, s in enumerate(path)))
-        want = -np.log(total) if total > 0 else 0.0
-        got = ctc_loss(logp, np.array(target))
-        assert np.isclose(got, want, atol=1e-9), (T, target, got, want)
-
-    check()
-
-
 def test_winnow_fingerprint_shift_overlap(spark):
     """Property of winnowing: prepending text shifts k-gram positions
     but most selected fingerprints survive (content-defined sampling),
