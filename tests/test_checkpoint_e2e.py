@@ -6,15 +6,23 @@ is converted by models/checkpoint.pth_to_npz and fed through the REAL
 Spark extraction pipeline; spans must equal the single-process oracle
 loading the same converted .npz — proving a user can drop their .pth
 straight into the engine with no torch installed.
+
+The fine-tune case stands in for a fine-tuning run with a small seeded
+update to every CTPN weight, writes the updated weights to .npz, and
+pipeline==oracle span parity must STILL hold — parity is
+weight-agnostic, not an artifact of the bundled seed-42 weights.
 """
 
+import os
 from collections import OrderedDict
 
+import numpy as np
 import pytest
 
 from ocr_pytorch_spark import datagen, oracle
+from ocr_pytorch_spark.models import weights as W
 from ocr_pytorch_spark.models.checkpoint import pth_to_npz
-from ocr_pytorch_spark.models.weights import load_npz
+from ocr_pytorch_spark.models.weights import load_npz, save_npz
 from ocr_pytorch_spark.operators import extract as EX
 
 # reuse the torch-free .pth writer + fake-torch fixture
@@ -76,3 +84,26 @@ def test_legacy_pth_to_spark_parity(fake_torch, spark,  # noqa: F811
     spec = EX.file_weights_spec(ctpn_npz, crnn_npz)
     _assert_pipeline_matches_oracle(spark, fixture_tables, spec,
                                     ctpn_npz, crnn_npz, fixture_cfg)
+
+
+def test_finetune_then_extract_parity(spark, fixture_tables,
+                                      bundled_weights, fixture_cfg,
+                                      tmp_path):
+    """Fine-tuned CTPN weights (every tensor moved by a small seeded
+    update) go through save_npz and file_weights_spec; the extraction
+    pipeline + oracle must still agree under the NEW weights."""
+    ctpn_w, _ = bundled_weights
+    rng = np.random.default_rng(47)
+    tuned = {k: (v + 0.01 * float(v.std())
+                 * rng.standard_normal(v.shape)).astype(np.float32)
+             for k, v in ctpn_w.items()}
+    moved = sum(float(np.abs(tuned[k] - ctpn_w[k]).max())
+                for k in ctpn_w)
+    assert moved > 0.0
+
+    tuned_npz = str(tmp_path / "ctpn_tuned.npz")
+    save_npz(tuned_npz, tuned)
+    crnn_npz = os.path.join(W.weights_dir(), "crnn.npz")
+    spec = EX.file_weights_spec(tuned_npz, crnn_npz)
+    _assert_pipeline_matches_oracle(spark, fixture_tables, spec,
+                                    tuned_npz, crnn_npz, fixture_cfg)

@@ -1,90 +1,91 @@
-"""Train-side losses (A5/W5) vs independent hand-computed values."""
+"""OHEM classification loss (A5/W5) vs independent hand-computed values.
 
+The loss lives on as the ``ohem_topk_sum`` entry query: per group,
+(sum of positive losses + sum of the hardest (300 - n_pos) negative
+losses) / 300, with positives the rows whose loss is >= 0.9
+(train_ctpn/ctpn_model.py:56-81).  Both the Spark query and its DuckDB
+oracle are checked against the value computed here with numpy.
+
+Losses are multiples of 1/1024, so every partial sum is exact in float64
+and the 4dp-quantized result is the same whatever order an engine adds
+in.
+"""
+
+import math
+
+import duckdb
 import numpy as np
+import pandas as pd
 
-from ocr_pytorch_spark.models import losses as L
+import __spark_entry__ as E
 
-
-def _softmax(x):
-    e = np.exp(x - x.max(axis=-1, keepdims=True))
-    return e / e.sum(axis=-1, keepdims=True)
+TOTAL_NUM = 300
 
 
-def test_rpn_regr_loss_smooth_l1():
-    # anchors: 0 pos, 1 pos, 1 ignore
-    target = np.array([[0, 0.0, 0.0],
-                       [1, 0.5, 0.02],
-                       [-1, 9.0, 9.0]])
-    pred = np.array([[9.9, 9.9],
-                     [0.3, 0.01],
-                     [0.0, 0.0]])
-    sigma = 9.0
-    # diffs for the positive row: |0.5-0.3|=0.2 (>=1/9 -> linear),
-    # |0.02-0.01|=0.01 (<1/9 -> quadratic)
-    want = (0.2 - 0.5 / sigma) + 0.5 * 0.01 ** 2 * sigma
-    assert np.isclose(L.rpn_regr_loss(pred, target), want)
-    # no positives -> 0
-    assert L.rpn_regr_loss(pred, np.zeros((3, 3))) == 0.0
+def _losses(rng, n, pos):
+    # positives >= 922/1024 > 0.9; negatives <= 921/1024 < 0.9
+    lo, hi = (922, 4096) if pos else (0, 922)
+    return rng.integers(lo, hi, size=n) / 1024.0
 
 
-def test_rpn_cls_loss_ohem_picks_hardest_negatives():
+def _want(pos, neg):
+    k = min(neg.size, max(0, TOTAL_NUM - pos.size))
+    hardest = np.sort(neg)[::-1][:k]
+    v = (pos.sum() + hardest.sum()) / TOTAL_NUM
+    return math.floor(v * 10000 + 0.5) / 10000
+
+
+def _ohem_both_engines(spark, tmp_path, groups):
+    """groups: {event_type: (pos_losses, neg_losses)} -> the
+    {event_type: (n_pos, ohem_loss)} of the Spark query and of the
+    DuckDB oracle."""
+    rows = []
+    for et, (pos, neg) in groups.items():
+        for v in np.concatenate([pos, neg]):
+            rows.append((et, len(rows), float(v)))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    path = str(sf / "events.parquet")
+    pd.DataFrame(rows, columns=["event_type", "event_id", "value"]) \
+        .to_parquet(path, index=False)
+
+    got = {r["event_type"]: (r["n_pos"], r["ohem_loss"])
+           for r in E.queries()["ohem_topk_sum"](spark, str(sf))
+           .collect()}
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    oracle = {et: (n, v) for et, n, v in
+              con.sql(E.oracle_sql()["ohem_topk_sum"]).fetchall()}
+    return got, oracle
+
+
+def test_rpn_cls_loss_ohem_picks_hardest_negatives(spark, tmp_path):
     rng = np.random.default_rng(0)
-    n = 500
-    pred = rng.normal(size=(n, 2))
-    target = np.zeros(n)
-    target[:5] = 1
-    target[-3:] = -1  # ignored
-    ce = -np.log(_softmax(pred))
-    pos_sum = ce[:5, 1].sum()
-    neg_ce = np.sort(ce[5:-3, 0])[::-1]
-    k = 300 - 5
-    want = (pos_sum + neg_ce[:k].sum()) / 300
-    assert np.isclose(L.rpn_cls_loss(pred, target), want)
+    groups = {
+        # 495 negatives > budget of 295: only the hardest count
+        "a": (_losses(rng, 5, True), _losses(rng, 495, False)),
+        # fewer negatives than the budget: all of them count
+        "b": (_losses(rng, 10, True), _losses(rng, 100, False)),
+    }
+    got, oracle = _ohem_both_engines(spark, tmp_path, groups)
+    want = {et: (pos.size, _want(pos, neg))
+            for et, (pos, neg) in groups.items()}
+    assert got == want
+    assert oracle == want
+    # the top-k matters: summing the first 295 negatives in input order
+    # instead of the hardest gives a different loss
+    pos, neg = groups["a"]
+    unsorted = math.floor((pos.sum() + neg[:295].sum()) / TOTAL_NUM
+                          * 10000 + 0.5) / 10000
+    assert got["a"][1] > unsorted
 
-    # non-OHEM branch: clamped mean NLL over non-ignored
-    keep = target != -1
-    nll = ce[keep, target[keep].astype(int)]
-    assert np.isclose(L.rpn_cls_loss(pred, target, ohem=False),
-                      min(nll.mean(), 10.0))
 
-
-def test_rpn_cls_loss_ohem_more_positives_than_budget():
+def test_rpn_cls_loss_ohem_more_positives_than_budget(spark, tmp_path):
     """n_pos > total_num: k clamps to 0 — no negatives contribute
     (a negative k would silently sum all-but-|k| hardest negatives)."""
     rng = np.random.default_rng(1)
-    n = 400
-    pred = rng.normal(size=(n, 2))
-    target = np.ones(n)
-    target[-50:] = 0  # 350 positives > total_num=300, 50 negatives
-    ce = -np.log(_softmax(pred))
-    want = ce[:-50, 1].sum() / 300  # positives only
-    assert np.isclose(L.rpn_cls_loss(pred, target), want)
-
-
-def test_ctc_loss_matches_path_enumeration():
-    rng = np.random.default_rng(1)
-    logits = rng.normal(size=(3, 4))
-    logp = np.log(_softmax(logits))
-    target = [2, 2]  # repeated label forces a blank between
-    # enumerate all 4^3 alignment paths, keep those collapsing to target
-    total = 0.0
-    for a in range(4):
-        for b in range(4):
-            for c in range(4):
-                path = [a, b, c]
-                collapsed = []
-                prev = 0
-                for s in path:
-                    if s != 0 and s != prev:
-                        collapsed.append(s)
-                    prev = s
-                if collapsed == target:
-                    total += np.exp(logp[0, a] + logp[1, b] + logp[2, c])
-    want = -np.log(total)
-    assert np.isclose(L.ctc_loss(logp, np.array(target)), want)
-
-
-def test_ctc_loss_impossible_is_zero():
-    logp = np.log(_softmax(np.zeros((2, 4))))
-    # needs T >= 3 for [1,1] (blank between repeats) -> zero_infinity
-    assert L.ctc_loss(logp, np.array([1, 1])) == 0.0
+    pos, neg = _losses(rng, 350, True), _losses(rng, 50, False)
+    got, oracle = _ohem_both_engines(spark, tmp_path, {"a": (pos, neg)})
+    want = math.floor(pos.sum() / TOTAL_NUM * 10000 + 0.5) / 10000
+    assert got == {"a": (350, want)}
+    assert oracle == {"a": (350, want)}
