@@ -32,10 +32,7 @@ from ocr_pytorch_spark.functions import quant4  # noqa: E402
 from ocr_pytorch_spark.operators import dedup as _DDP  # noqa: E402
 from ocr_pytorch_spark.operators import indexing as _IX  # noqa: E402
 from ocr_pytorch_spark.operators import text as _TXT  # noqa: E402
-from ocr_pytorch_spark.operators import tokenizer as _TOK  # noqa: E402
 from ocr_pytorch_spark.operators import web as _WEB  # noqa: E402
-from ocr_pytorch_spark.operators.graph import (  # noqa: E402
-    pagerank_oracle_sql as _pagerank_oracle_sql)
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 N_OCR_DOCS = 48        # docs used by the flagship OCR query
@@ -677,95 +674,6 @@ def _semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                             tau=0.9)
 
 
-def _bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inference-side BPE tokenization surface — ORACLE-BEARING since
-    r6 (the text_compression literal-relation pattern): the corpus is
-    datagen.bpe_fixture_text over 48 doc_ids (Sennrich-style
-    inflection lexicon, md5-skewed frequencies — 8 merges train with
-    counts >= 195, shared -er/-est suffixes force multi-level merges),
-    synthesized ON EXECUTORS from doc_id alone.  Spark runs the REAL
-    distributed trainer + encoder (operators/tokenizer.bpe_train /
-    bpe_encode — iterative argmax merges, then one codegen-collapsed
-    projection chain, no UDF); the oracle re-derives the merge table
-    and encodings with a pure-Python Sennrich reference (Sennrich et
-    al. 2016, alg. 1) at oracle-build time and emits the literal
-    (word, n, n_tokens, tokens) relation — merges are data-dependent,
-    so the static-corpus fixture is exactly what makes a static SQL
-    oracle exist.  The full documents-table path stays covered by
-    tests/test_tokenizer.py."""
-    from ocr_pytorch_spark.operators import tokenizer as TK
-
-    def synth(batches):
-        import pandas as pd
-
-        from ocr_pytorch_spark.datagen import bpe_fixture_text
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": [int(k) for k in pdf["doc_id"]],
-                "text": [bpe_fixture_text(int(k))
-                         for k in pdf["doc_id"]]})
-
-    _ship_package(spark)
-    docs = (_t(spark, sf_dir, "documents")
-            .where(F.col("doc_id") < 48).select("doc_id"))
-    texts = docs.mapInPandas(synth, "doc_id long, text string")
-    merges = TK.bpe_train(texts, n_merges=8)
-    enc = TK.bpe_encode(TK.word_vocab(texts), merges)
-    return enc.select(
-        "word", "n",
-        F.size("syms").cast("long").alias("n_tokens"),
-        F.concat_ws(" ", "syms").alias("tokens"))
-
-
-def _bpe_encode_tokens_oracle_sql() -> str:
-    """Literal expected relation from a pure-Python Sennrich BPE
-    (train + greedy left-to-right merge application — the same
-    semantics tests/test_tokenizer.py verifies the engine against),
-    over the identical datagen.bpe_fixture_text corpus."""
-    from ocr_pytorch_spark.datagen import bpe_fixture_text
-
-    counts: dict[str, int] = {}
-    for k in range(48):
-        for w in bpe_fixture_text(k).split():
-            counts[w] = counts.get(w, 0) + 1
-
-    vocab = {tuple(w): c for w, c in counts.items()}
-    for _step in range(8):
-        pairs: dict[tuple, int] = {}
-        for syms, c in vocab.items():
-            for i in range(len(syms) - 1):
-                pairs[syms[i], syms[i + 1]] = \
-                    pairs.get((syms[i], syms[i + 1]), 0) + c
-        if not pairs:
-            break
-        (a, b), cnt = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        if cnt < 2:
-            break
-
-        def _merge(s: tuple, a: str = a, b: str = b) -> tuple:
-            out: list[str] = []
-            i = 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            return tuple(out)
-
-        vocab = {_merge(s): c for s, c in vocab.items()}
-
-    rows = [f"('{''.join(s)}', {c}, {len(s)}, '{' '.join(s)}')"
-            for s, c in sorted(vocab.items())]
-    assert len(rows) == 12, "fixture design drifted"
-    return ("SELECT word, CAST(n AS BIGINT) AS n, "
-            "CAST(n_tokens AS BIGINT) AS n_tokens, tokens "
-            "FROM (VALUES " + ", ".join(rows)
-            + ") AS t(word, n, n_tokens, tokens)")
-
-
 def _multimodal_video_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MJPEG-AVI frame sampling as a PARITY surface — ORACLE-BEARING
     since r6 (the png_ocr_extract empty-anti-join pattern): clips are
@@ -932,37 +840,6 @@ def _multimodal_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return image_dhash(images)
 
 
-def _snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot table layer (sources/snaptable.py) end-to-end under
-    the driver: two appends + a compaction into a fresh table, then
-    per-version aggregates via time travel plus an incremental read —
-    all deterministic functions of the documents table, so the DuckDB
-    oracle recomputes them relationally."""
-    import tempfile
-
-    from ocr_pytorch_spark.sources import snaptable
-
-    t = snaptable.create(
-        spark, tempfile.mkdtemp(prefix="snaptable_query_"))
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    t.append(docs.where(F.col("doc_id") % 3 == 0))
-    t.append(docs.where(F.col("doc_id") % 3 == 1))
-    t.compact(target_file_rows=1 << 20)
-
-    def agg(tag, df):
-        return df.agg(
-            F.lit(tag).alias("tag"),
-            F.count("*").alias("n_rows"),
-            F.sum("n_chars").alias("sum_chars"),
-            F.min("doc_id").alias("min_id"),
-            F.max("doc_id").alias("max_id"))
-
-    return (agg("v1", t.read(1))
-            .unionByName(agg("v2", t.read(2)))
-            .unionByName(agg("v3_compacted", t.read(3)))
-            .unionByName(agg("incr_1_2", t.incremental(1, 2))))
-
-
 # --- queries -----------------------------------------------------------
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -1059,8 +936,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         time buckets x event_type with count/sum/min/max — the
         pre-aggregation a timeseries store maintains incrementally; in
         Spark it is one partial-aggregated groupBy whose bucket key is
-        a pure function of ts (so it also runs under streaming with a
-        watermark, see streaming/windows.py)."""
+        a pure function of ts."""
         ev = _t(spark, sf, "events")
         bucket = F.date_trunc("HOUR", F.col("ts"))
         return (ev.groupBy(
@@ -1601,70 +1477,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                         .alias("bucket"))
                 .groupBy("bucket").agg(F.count("*").alias("n")))
 
-    # --- streaming operators, driver-checked via batch equivalence
-    # (VERDICT r3 task 8).  Each runs the SAME function the streaming
-    # pipelines use (streaming/windows.py) on a batch frame; the
-    # stream==batch equivalence itself is proven in
-    # tests/test_streaming.py, so an oracle-green row here certifies
-    # the streaming operator's aggregation/join/dedup logic.
-
-    def stream_windowed_counts(spark, sf):
-        """Watermarked tumbling event-time window agg
-        (streaming/windows.windowed_event_counts): F.window() is the
-        identical function in batch and readStream plans, and the
-        watermark is a no-op in batch."""
-        from ocr_pytorch_spark.streaming.windows import (
-            windowed_event_counts)
-        out = windowed_event_counts(_t(spark, sf, "events"),
-                                    window="5 minutes",
-                                    watermark="2 minutes")
-        return out.select(
-            F.date_format("w_start", "yyyy-MM-dd HH:mm")
-            .alias("w_start"),
-            "event_type", F.col("n").cast("long").alias("n"),
-            quant4(F.col("sum_value")).alias("sum_value_q4"))
-
-    def dedup_incremental_stream_q(spark, sf):
-        """Stream-static batch-vs-history near-dup
-        (streaming/windows.stream_incremental_neardup): the history
-        band index is built exactly as an ingest job persists it (the
-        md5-lower-half doc sample), the batch half plays the stream,
-        and the stateless stream-static join emits one row per
-        matching band — identical relation in batch and streaming, so
-        the batch run is the oracle surface.  Capped at 1 to mirror
-        the dedup_incremental driver key."""
-        from ocr_pytorch_spark.operators.dedup import _minhash_band_rows
-        from ocr_pytorch_spark.streaming import windows as SW
-        docs = _t(spark, sf, "documents")
-        cut = F.lit(int(0.5 * 16 ** 8))
-        is_hist = (F.conv(F.substring(
-            F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast("long") < cut)
-        hist_index = (_minhash_band_rows(docs.where(is_hist), 8, 4)
-                      .withColumnRenamed("doc_id", "dup_of"))
-        batch = docs.where(~is_hist).select("doc_id", "text")
-        return SW.stream_incremental_neardup(batch, hist_index,
-                                             bucket_cap=1)
-
-    def stream_interval_join_q(spark, sf):
-        """Watermarked stream-stream interval join (ad-attribution
-        shape, streaming/windows.stream_interval_join): inner interval
-        joins emit on match in streaming, so identical frames produce
-        identical rows in batch."""
-        from ocr_pytorch_spark.streaming import windows as SW
-        ev = (_t(spark, sf, "events")
-              .withColumn("item_id", F.col("event_id") % 4))
-        imp = (ev.where(F.col("event_type") == "view")
-               .select("user_id", "item_id", "ts"))
-        clk = (ev.where(F.col("event_type") == "click")
-               .select("user_id", "item_id", "ts"))
-        out = SW.stream_interval_join(imp, clk, max_delay="6 hours",
-                                      watermark="12 hours")
-        return out.select(
-            "user_id", F.col("imp_item").alias("item_id"),
-            F.unix_micros("imp_ts").alias("imp_us"),
-            F.unix_micros("clk_ts").alias("clk_us"))
-
     def doc_chunks(spark, sf):
         """RAG / training-window chunking: overlapping fixed-size
         token windows, map-side only (operators/text.chunk_documents);
@@ -1677,31 +1489,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         (operators/text.pack_sequences)."""
         return T.pack_sequences(_t(spark, sf, "documents"))
 
-    def pagerank_q(spark, sf):
-        """Iterative-join family: 8 synchronous PageRank iterations
-        with dangling-mass redistribution over the deterministic link
-        graph (operators/graph.pagerank; lineage bounded by
-        localCheckpoint)."""
-        from ocr_pytorch_spark.operators.graph import pagerank
-        return pagerank(_t(spark, sf, "documents"))
-
     def lm_perplexity_q(spark, sf):
         """CCNet-style bigram-LM quality signal: mean NLL per doc
         under an add-k smoothed count LM trained on the corpus
         (operators/text.lm_perplexity)."""
         return T.lm_perplexity(_t(spark, sf, "documents"))
-
-    def stream_dedup_hashes(spark, sf):
-        """Streaming exact-dedup (watermarked dropDuplicates on the
-        content hash, streaming/windows.stream_dedup).  WHICH duplicate
-        row survives is arrival-order-dependent, so the oracle checks
-        the deterministic projection: the surviving key set is exactly
-        the distinct hash set."""
-        from ocr_pytorch_spark.streaming.windows import stream_dedup
-        docs = (_t(spark, sf, "documents")
-                .withColumn("ts", F.timestamp_seconds(
-                    F.lit(1704067200) + F.col("doc_id"))))
-        return stream_dedup(docs).select("content_hash")
 
     base = {
         # --- ordering matters: the driver verifies queries in dict
@@ -1727,7 +1519,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _t(s, sf, "documents")),
         "layout_reading_order": lambda s, sf: H.layout_reading_order(
             _t(s, sf, "documents")),
-        # outlink/anchor-text harvest feeding the link graph (r6,
+        # outlink/anchor-text harvest (r6,
         # operators/html.html_outlinks) — data-dependent citation
         # links over html_wrap_linked pages
         "html_outlinks": lambda s, sf: H.html_outlinks(
@@ -1752,7 +1544,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _t(s, sf, "documents")),
         "dedup_lines": lambda s, sf: D.line_dedup(
             _t(s, sf, "documents")),
-        "snapshot_time_travel": _snapshot_time_travel,
         # corpus indexing family (r3, new)
         "tfidf_topk": lambda s, sf: _IX.tfidf_topk(
             _t(s, sf, "documents")),
@@ -1762,8 +1553,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _t(s, sf, "documents")),
         "zorder_key": lambda s, sf: _t(s, sf, "documents").select(
             "doc_id", _IX.zorder_key("doc_id", "n_chars").alias("z")),
-        "bpe_top_pairs": lambda s, sf: _TOK.bpe_pair_counts(
-            _t(s, sf, "documents")),
         "quality_classifier": lambda s, sf: T.quality_classifier(
             _t(s, sf, "documents")),
         "corpus_mix": lambda s, sf: T.corpus_mix(
@@ -1904,16 +1693,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "set_ops": set_ops,
         "pivot_counts": pivot_counts,
         "histogram_value": histogram_value,
-        # streaming operators via batch equivalence (r4, new)
-        "stream_windowed_counts": stream_windowed_counts,
-        "stream_interval_join": stream_interval_join_q,
-        "dedup_incremental_stream": dedup_incremental_stream_q,
-        "stream_dedup_hashes": stream_dedup_hashes,
         # LLM training-data prep (r4, new)
         "doc_chunks": doc_chunks,
         "pack_sequences": pack_sequences_q,
         "lm_perplexity": lm_perplexity_q,
-        "pagerank": pagerank_q,
         # sketch tolerance relation (oracle-bearing since r7, suite
         # member — see _SUITES)
         "approx_distinct": approx_distinct,
@@ -1925,7 +1708,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_audio": _multimodal_audio,
         "multimodal_video": _multimodal_video,
         "multimodal_video_mjpeg": _multimodal_video_mjpeg,
-        "bpe_encode_tokens": _bpe_encode_tokens,
         # oracle-bearing since r6 (designed fixture, literal oracle):
         "multimodal_audio_neardup": _multimodal_audio_neardup,
         "text_compression": _text_compression,
@@ -2184,19 +1966,19 @@ _PINNED = ["ocr_extract_parity"]
 # EVEN extraction veterans into the new suite_extraction — 50 members
 # across 7 suites):
 #   * _PINNED (1): the flagship parity key, EVERY round.
-#   * _ROT_ODD (35 = 30 singles + 5 suites) / _ROT_EVEN (36 = 34
+#   * _ROT_ODD (36 = 31 singles + 5 suites) / _ROT_EVEN (33 = 31
 #     singles + suite_web_hygiene + suite_extraction): every 2
 #     rounds.  Suites debut in the parity leading their landing round
 #     OR mechanically (never-checked keys always sort into the next
 #     window); all folded members were green <= 2 rounds before their
 #     suite's first check, so every gap stays within cadence.
-# Window arithmetic: odd rounds 1 + 35 = 36, even rounds 1 + 36 = 37,
-# plus the 5 declared r8 debuts — >= 7 free slots at BOTH parities
-# AFTER the r8 debuts clear.  tests/test_html.py asserts >= 5 free
+# Window arithmetic: odd rounds 1 + 36 = 37, even rounds 1 + 33 = 34,
+# no declared debuts — 13 free slots in odd rounds and 16 in even
+# rounds.  tests/test_html.py asserts >= 5 free
 # slots in BOTH parities (headroom, not just fit) and that the window
-# still holds every lead key even with all 12 currently-unchecked
-# keys mechanically promoted, so new keys for the next several rounds
-# are plain appends — no cascade.
+# still holds every lead key even with every never-checked key
+# mechanically promoted (none at present), so new keys for the next
+# several rounds are plain appends — no cascade.
 # Suite members are excluded from the window by _rotate() and ordered
 # after it; rows-only keys trail last.  Steady state: every oracle
 # key (or its certifying suite) every 2 rounds.
@@ -2208,8 +1990,8 @@ _ROT_ODD = [
     # CORRECTNESS_r05, not wait for r6; it was checked green in r4,
     # so the every-2-rounds cadence is unbroken either way
     "pack_sequences",
-    "snapshot_time_travel", "tfidf_topk", "inverted_index",
-    "top_ngrams_corpus", "zorder_key", "bpe_top_pairs",
+    "tfidf_topk", "inverted_index",
+    "top_ngrams_corpus", "zorder_key",
     "quality_classifier", "corpus_mix", "dedup_substring_spans",
     # phrase_lookup + tpch_q18 folded into suites in the r7
     # restructure (suite_agg_stats / suite_tpch); tpch_q5 + tpch_q10
@@ -2271,20 +2053,17 @@ _ROT_EVEN = [
     # round-4 debuts, folded straight into the even group: round 4's
     # window still covers them (2 pinned + 37 even + 11 odd = 50) and
     # round 5's leading group (2 + 48 odd) then fits exactly
-    "stream_windowed_counts", "stream_interval_join",
-    "stream_dedup_hashes", "doc_chunks",
-    "lm_perplexity", "pagerank",
+    "doc_chunks", "lm_perplexity",
     # r6 oracle upgrades, folded directly into the even group (their
     # debut round 6 is even — see CAPACITY NOTE above):
     "text_compression", "multimodal_neardup", "png_ocr_extract",
     "multimodal_audio_neardup", "multimodal_video_mjpeg",
-    "bpe_encode_tokens",
     # demoted from _PINNED in r6 (see CAPACITY NOTE above):
     "salted_join",
     # r9 fold of the r8 debuts (r8 VERDICT task 1), even slice —
     # checked r8, so r10/r12/... keeps the 2-round cadence; the sim_*
     # family already lives in this group
-    "sim_pq_codes", "sim_pq_topk", "dedup_incremental_stream",
+    "sim_pq_codes", "sim_pq_topk",
     # moved from _ROT_ODD in the r5 rebalance; corpus_filter /
     # text_winnow_fp / text_repetition / decontam_overlap /
     # pii_redact / url_host_filter (+ text_lang_id above) folded into
@@ -2617,37 +2396,14 @@ def oracle_sql() -> dict[str, str]:
             SELECT CAST(floor(value / 25.0) AS INT) AS bucket,
                    count(*) AS n
             FROM events GROUP BY 1""",
-        # streaming operators' batch equivalents: both engines align
-        # tumbling buckets to origins that are whole multiples of the
-        # 5-minute width apart (Spark: 1970-01-01, DuckDB time_bucket:
-        # 2000-01-01), so the buckets coincide
-        "stream_windowed_counts": f"""
-            SELECT strftime(time_bucket(INTERVAL 5 minutes, ts),
-                            '%Y-%m-%d %H:%M') AS w_start,
-                   event_type, count(*) AS n,
-                   {quant4_sql('sum(value)')} AS sum_value_q4
-            FROM events GROUP BY 1, 2""",
-        "stream_interval_join": """
-            WITH ev AS (SELECT user_id, event_id % 4 AS item_id, ts,
-                               event_type FROM events)
-            SELECT i.user_id, i.item_id,
-                   epoch_us(i.ts) AS imp_us, epoch_us(c.ts) AS clk_us
-            FROM ev i JOIN ev c
-              ON i.event_type = 'view' AND c.event_type = 'click'
-             AND i.user_id = c.user_id AND i.item_id = c.item_id
-             AND c.ts >= i.ts AND c.ts <= i.ts + INTERVAL 6 hours""",
-        "stream_dedup_hashes": """
-            SELECT DISTINCT md5(text) AS content_hash FROM documents""",
         "doc_chunks": _TXT.chunk_documents_oracle_sql(),
         "pack_sequences": _TXT.pack_sequences_oracle_sql(),
         "lm_perplexity": _TXT.lm_perplexity_oracle_sql(),
-        "pagerank": _pagerank_oracle_sql(),
         # r6 oracle upgrades (r5 VERDICT tasks 4+5)
         "text_compression": _text_compression_oracle_sql(),
         "multimodal_neardup": _multimodal_neardup_oracle_sql(),
         "multimodal_audio_neardup":
             _multimodal_audio_neardup_oracle_sql(),
-        "bpe_encode_tokens": _bpe_encode_tokens_oracle_sql(),
         "png_ocr_extract": """
             SELECT CAST(NULL AS VARCHAR) AS media_ref,
                    CAST(NULL AS INT) AS box_order,
@@ -3108,28 +2864,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT d.doc_id, coalesce(k.kept_text, '') AS kept_text,
                    CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept
             FROM documents d LEFT JOIN kept k USING (doc_id)""",
-        # the snapshot layer's appends/compaction are deterministic
-        # functions of documents, so each time-travel view recomputes
-        # relationally (v3 is the compaction of v2 -> same rows)
-        "snapshot_time_travel": """
-            SELECT 'v1' AS tag, count(*) AS n_rows,
-                   CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-                   min(doc_id) AS min_id, max(doc_id) AS max_id
-            FROM documents WHERE doc_id % 3 = 0
-            UNION ALL
-            SELECT 'v2', count(*), CAST(sum(n_chars) AS BIGINT),
-                   min(doc_id), max(doc_id)
-            FROM documents WHERE doc_id % 3 IN (0, 1)
-            UNION ALL
-            SELECT 'v3_compacted', count(*),
-                   CAST(sum(n_chars) AS BIGINT),
-                   min(doc_id), max(doc_id)
-            FROM documents WHERE doc_id % 3 IN (0, 1)
-            UNION ALL
-            SELECT 'incr_1_2', count(*), CAST(sum(n_chars) AS BIGINT),
-                   min(doc_id), max(doc_id)
-            FROM documents WHERE doc_id % 3 = 1""",
-        "bpe_top_pairs": _TOK.bpe_pair_counts_oracle_sql(),
         "quality_classifier": _TXT.quality_classifier_oracle_sql(),
         "corpus_mix": _TXT.corpus_mix_oracle_sql(),
         "dedup_substring_spans":
@@ -3495,33 +3229,6 @@ def oracle_sql() -> dict[str, str]:
               ON z.band_idx = h.band_idx AND z.key = h.key
             WHERE NOT b.is_hist AND h.is_hist AND z.n <= 1
             GROUP BY b.doc_id, h.doc_id""",
-        # the stream-static form: one row per matching band, no
-        # grouping (the stream emits per micro-batch; batch == union
-        # of micro-batches because the join is stateless)
-        "dedup_incremental_stream": _GRAMS_CTE + f""", sig AS (
-              SELECT doc_id, {_MH} FROM grams GROUP BY doc_id
-            ), banded AS (
-              SELECT doc_id, {_BANDS} FROM sig
-            ), stacked AS (
-              SELECT doc_id, 0 AS band_idx, band0 AS key FROM banded
-              UNION ALL SELECT doc_id, 1, band1 FROM banded
-              UNION ALL SELECT doc_id, 2, band2 FROM banded
-              UNION ALL SELECT doc_id, 3, band3 FROM banded
-            ), flagged AS (
-              SELECT doc_id, band_idx, key,
-                     ({_H8_DOC}) < 2147483648 AS is_hist
-              FROM stacked
-            ), hsz AS (
-              SELECT band_idx, key, count(*) AS n
-              FROM flagged WHERE is_hist GROUP BY band_idx, key
-            )
-            SELECT b.doc_id AS doc_id, h.doc_id AS dup_of,
-                   CAST(b.band_idx AS INT) AS band_idx
-            FROM flagged b JOIN flagged h
-              ON b.band_idx = h.band_idx AND b.key = h.key
-            JOIN hsz z
-              ON z.band_idx = h.band_idx AND z.key = h.key
-            WHERE NOT b.is_hist AND h.is_hist AND z.n <= 1""",
         "dedup_simhash": _W_CTE + f""", c AS (
               SELECT doc_id, {_SIMHASH_CODE} AS code FROM w
             ), bits AS (

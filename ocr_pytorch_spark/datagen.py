@@ -336,22 +336,3 @@ def audio_neardup_clip(g: int, v: int) -> np.ndarray:
     rng = np.random.default_rng(1000 * g + v)
     sig += rng.normal(0.0, 80.0, n)
     return np.clip(sig, -32768, 32767).astype(np.int16)
-
-
-_BPE_WORDS = (
-    "low lower lowest new newer newest wide wider widest "
-    "late later latest").split()
-
-
-def bpe_fixture_text(k: int) -> str:
-    """Deterministic BPE fixture doc k: 20 words drawn from a 12-word
-    Sennrich-style inflection lexicon with md5-skewed frequencies, so
-    8 merges train with counts >= 2, shared suffixes (-er/-est) force
-    multi-level merges, and equal-count ties exercise the pair-asc
-    tie-break.  Pure function of k — executors, tests and the
-    oracle-build step regenerate the identical corpus."""
-    digest = hashlib.md5(f"bpefix-{k}".encode()).digest()
-    # skew toward the low indices so frequent stems dominate merges
-    return " ".join(_BPE_WORDS[(digest[j % 16] + j * k) % 9
-                               if j % 3 else (digest[j % 16] + j) % 12]
-                    for j in range(20))

@@ -52,11 +52,6 @@ def quant4_sql(expr: str) -> str:
     return f"floor(({expr}) * 10000 + 0.5) / 10000"
 
 
-def hex_digit_expr(char_sql: str) -> str:
-    """SQL fragment: numeric value of one hex char (portable)."""
-    return f"(instr('{HEX}', {char_sql}) - 1)"
-
-
 # --- array-native vector helpers -------------------------------------
 #
 # Cosine / random-projection math on array columns, NOT exploded
@@ -101,14 +96,6 @@ def plane_weights(p: int, dim: int) -> list[float]:
     return [plane_weight(p, i) for i in range(dim)]
 
 
-def weight_array(p: int, dim: int) -> Column:
-    """Literal array<double> of hyperplane p's weights.  A single
-    ArrayType Literal node (F.lit of the list), NOT 64 CreateArray
-    children — per-column literals make Catalyst analysis/codegen the
-    dominant cost of small-scale runs."""
-    return F.lit(plane_weights(p, dim))
-
-
 def weights_matrix(n_planes: int, dim: int) -> Column:
     """All hyperplanes as one array<array<double>> literal — pair with
     transform() to compute every projection in a single expression."""
@@ -116,13 +103,6 @@ def weights_matrix(n_planes: int, dim: int) -> Column:
 
 
 def weight_array_sql(p: int, dim: int) -> str:
-    """DuckDB literal for the same weights."""
+    """DuckDB literal for hyperplane p's weights."""
     return "[" + ",".join(repr(w) for w in plane_weights(p, dim)) \
         + "]::DOUBLE[]"
-
-
-def dot_sql(a: str, b: str) -> str:
-    """DuckDB fragment matching array_dot bit-for-bit."""
-    return f"list_dot_product({a}, {b})"
-
-

@@ -70,37 +70,6 @@ def minhash_signatures(documents: DataFrame, k: int = 8,
     return grams.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_sig_array(text_col: str = "text", k: int = 8,
-                      shingle_n: int = 3):
-    """Map-side (aggregation-free) MinHash signature of one document's
-    text column: the same component family as ``minhash_signatures``
-    (min over word-shingles of an 8-hex md5 slice), but computed with
-    array expressions so it evaluates per ROW — no groupBy, so it can
-    sit inside a streaming plan where an aggregation would be a second
-    stateful operator.  Returns an ``array<string>`` column
-    [mh0..mh{k-1}]; docs with fewer than ``shingle_n`` words yield
-    null components (callers filter on element 0).  Equality with the
-    aggregate form: ``array_min`` and ``min`` share Spark's binary
-    string ordering, and the gram construction is the identical
-    transform+slice as operators/text.word_ngrams."""
-    from ocr_pytorch_spark.functions import words
-
-    ws = words(F.col(text_col))
-    grams = F.transform(
-        ws, lambda x, i: F.concat_ws(" ", F.slice(ws, i + 1, shingle_n)))
-    grams = F.slice(grams, 1,
-                    F.greatest(F.size(ws) - shingle_n + 1, F.lit(0)))
-    def comp(pre: str, lo: int):
-        # factory keeps the transform lambda unary (pyspark counts
-        # lambda parameters to pick the (x) vs (x, i) signature)
-        return F.array_min(F.transform(
-            grams, lambda g: F.substring(
-                F.md5(F.concat(F.lit(pre), g)), lo, 8)))
-
-    return F.array(*[comp(f"{i // 4}:", (i % 4) * 8 + 1)
-                     for i in range(k)])
-
-
 def _minhash_band_rows(documents: DataFrame, k: int,
                        bands: int) -> DataFrame:
     """(doc_id, band_idx, key) band rows."""

@@ -225,7 +225,7 @@ def boilerplate_classify(documents: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Outlink / anchor-text harvest (link-graph build)
+# Outlink / anchor-text harvest
 # ---------------------------------------------------------------------------
 
 # one regex, two capture groups: (dst_host, anchor text).  Written in
@@ -268,11 +268,11 @@ def html_wrap_linked(documents: DataFrame) -> DataFrame:
 
 
 def html_outlinks(documents: DataFrame) -> DataFrame:
-    """Anchor-text corpus / link-graph build: harvest every
+    """Anchor-text corpus build: harvest every
     ``<a href=https://host/...>anchor</a>`` from the rendered pages
     and aggregate per destination host — the pass a web pipeline runs
-    alongside main-content extraction to feed link analysis (the
-    ``pagerank`` operator here) and anchor-text retrieval corpora.
+    alongside main-content extraction to feed link analysis and
+    anchor-text retrieval corpora.
     Output: (dst_host, n_links, n_docs, anchor_chars), exact integers.
 
     Scale shape: link extraction is two ``regexp_extract_all`` over

@@ -19,11 +19,11 @@ Scale notes (100 TB story):
   bigrams map-side; the global top-k is a single ordered limit (Spark
   executes TakeOrderedAndProject — no full sort).
 * ``zorder_key``: bit-interleaving two dimensions gives multi-column
-  locality for the snapshot layer's manifest pruning
-  (``snaptable.scan_range``): sorting by z-order before writing makes
-  file [min, max] bounds tight in BOTH dimensions, so range scans on
-  either column skip files (Delta/Iceberg OPTIMIZE ZORDER does the
-  same thing).  Pure integer arithmetic — bit-exact cross-engine.
+  locality for min/max file pruning: sorting by z-order before writing
+  makes per-file [min, max] bounds tight in BOTH dimensions, so range
+  scans on either column skip files (Delta/Iceberg OPTIMIZE ZORDER
+  does the same thing).  Pure integer arithmetic — bit-exact
+  cross-engine.
 """
 
 from __future__ import annotations
@@ -216,21 +216,6 @@ def zorder_key_sql(a: str, b: str, bits: int = ZORDER_BITS) -> str:
         terms.append(f"((({a} // {1 << i}) % 2) * {1 << (2 * i)})")
         terms.append(f"((({b} // {1 << i}) % 2) * {1 << (2 * i + 1)})")
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
-def zorder_cluster(documents: DataFrame,
-                   cols: tuple[str, str] = ("doc_id", "n_chars")
-                   ) -> DataFrame:
-    """Documents keyed and range-sorted by Z-order over two columns —
-    the write-side clustering that makes ``snaptable.scan_range``
-    prune on either column.  Output: doc_id, <b>, z."""
-    a, b = cols
-    return (documents
-            .select(a, b, zorder_key(a, b).alias("z"))
-            .repartitionByRange(
-                documents.sparkSession.sparkContext.defaultParallelism,
-                "z")
-            .sortWithinPartitions("z"))
 
 
 def phrase_lookup(documents: DataFrame) -> DataFrame:

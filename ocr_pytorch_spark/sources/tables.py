@@ -4,9 +4,9 @@ The engine targets Iceberg tables (BASELINE.json north_rule); the sandbox
 has no Iceberg runtime jar, so the writer degrades to partitioned Parquet
 with the same per-partition-atomic overwrite semantics
 (``partitionOverwriteMode=dynamic``), which is what the lineage/resume
-layer relies on (SURVEY.md §4.3, §7.2).  The table-format semantics the
-north rule names — snapshots, time travel, incremental reads, manifest
-file skipping, compaction — live in ``sources/snaptable.py``.
+layer relies on (SURVEY.md §4.3, §7.2).  Commit bookkeeping on top of
+these writes (the ``_lineage``/``_metrics`` tables that make a bucket
+committed) lives in ``plans/lineage.py``.
 """
 
 from __future__ import annotations
@@ -15,17 +15,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TPCH_TABLES = ("region", "nation", "customer", "supplier", "part",
-               "orders", "lineitem", "events", "documents", "embeddings")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TPCH_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def iceberg_available(spark: SparkSession) -> bool:

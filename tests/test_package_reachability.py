@@ -3,7 +3,11 @@ the benchmark (perfbench) or the query entry module (__spark_entry__.py).
 
 A pure-``ast`` walk of import statements (module-level and
 function-local, absolute and relative) from those roots; a module no
-root reaches is dead weight and should be deleted with its tests."""
+root reaches is dead weight and should be deleted with its tests.
+
+Inside a reached module, every top-level function and class must be
+named somewhere in the repo's Python; one that nothing names has no
+caller and should be deleted too."""
 
 import ast
 import glob
@@ -80,3 +84,46 @@ def test_every_package_module_is_reached():
     assert not unreached, (
         f"{len(unreached)} package modules reached by no job, perfbench "
         f"module or __spark_entry__.py: {unreached}")
+
+
+def _named(path: str) -> set[str]:
+    """Identifiers ``path`` names: Name and Attribute nodes, import
+    names and aliases, and string constants that are identifiers
+    (``getattr`` targets, ``__all__``, monkeypatch targets)."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.alias):
+            out.update(node.name.split("."))
+            if node.asname:
+                out.add(node.asname)
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and node.value.isidentifier()):
+            out.add(node.value)
+    return out
+
+
+def test_every_package_function_is_named():
+    files = [os.path.join(REPO, "__spark_entry__.py")]
+    for d in (PKG, "jobs", "perfbench", "scripts", "tests"):
+        files += glob.glob(os.path.join(REPO, d, "**", "*.py"),
+                           recursive=True)
+    named = set().union(*map(_named, files))
+    unnamed = []
+    for path in sorted(_package_modules().values()):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        unnamed += [f"{os.path.relpath(path, REPO)}::{node.name}"
+                    for node in tree.body
+                    if isinstance(node, (ast.FunctionDef,
+                                         ast.AsyncFunctionDef,
+                                         ast.ClassDef))
+                    and node.name not in named]
+    assert not unnamed, (
+        f"{len(unnamed)} package functions or classes named nowhere in "
+        f"the repo: {unnamed}")

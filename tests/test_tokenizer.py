@@ -1,110 +1,5 @@
-"""Distributed BPE training (operators/tokenizer.py) vs an
-independent pure-Python reference of the same algorithm, plus the
-logistic quality classifier; cross-engine hashes live in
-test_entry_contract."""
-
-import pytest
-from pyspark.sql import functions as F
-
-from ocr_pytorch_spark.operators import tokenizer as TK
-
-
-# --- reference implementation (Sennrich-style, weighted vocab) ---
-
-def _ref_bpe(word_counts: dict[str, int], n_merges: int):
-    vocab = {tuple(w): c for w, c in word_counts.items()}
-    merges = []
-    for step in range(1, n_merges + 1):
-        pairs: dict[tuple, int] = {}
-        for syms, c in vocab.items():
-            for i in range(len(syms) - 1):
-                pairs[syms[i], syms[i + 1]] = \
-                    pairs.get((syms[i], syms[i + 1]), 0) + c
-        if not pairs:
-            break
-        # tie-break: count desc, then pair asc (the engine convention)
-        (a, b), cnt = min(pairs.items(),
-                          key=lambda kv: (-kv[1], kv[0]))
-        if cnt < 2:
-            break
-        merges.append({"step": step, "left": a, "right": b,
-                       "merged": a + b, "n": cnt})
-        vocab = {_ref_merge(s, a, b): c for s, c in vocab.items()}
-    return merges
-
-
-def _ref_merge(syms: tuple, a: str, b: str) -> tuple:
-    out, i = [], 0
-    while i < len(syms):
-        if (i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b
-                and (not out or True)):
-            out.append(a + b)
-            i += 2
-        else:
-            out.append(syms[i])
-            i += 1
-    return tuple(out)
-
-
-SENTS = [
-    "low low low low low",
-    "lower lower",
-    "newest newest newest newest newest newest",
-    "widest widest widest",
-    "low lower newest",
-]
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.createDataFrame(
-        [(i, s) for i, s in enumerate(SENTS)],
-        "doc_id long, text string")
-
-
-def _word_counts():
-    wc: dict[str, int] = {}
-    for s in SENTS:
-        for w in s.split(" "):
-            wc[w] = wc.get(w, 0) + 1
-    return wc
-
-
-def test_bpe_train_matches_reference(spark, docs):
-    got = TK.bpe_train(docs, n_merges=6)
-    want = _ref_bpe(_word_counts(), 6)
-    assert got == want
-    # the classic corpus learns 'es'/'est' style merges
-    assert any(m["merged"] == "es" for m in got)
-
-
-def test_bpe_greedy_overlap(spark):
-    """'aaaa' with merge (a,a) must tokenize left-to-right greedy:
-    [aa, aa], never [a, aa, a]."""
-    d = spark.createDataFrame([(0, "aaaa aaaa aa")],
-                              "doc_id long, text string")
-    merges = TK.bpe_train(d, n_merges=1)
-    assert merges[0]["left"] == "a" and merges[0]["right"] == "a"
-    enc = TK.bpe_encode(
-        spark.createDataFrame([("aaaaa",)], "word string"), merges)
-    assert enc.collect()[0]["syms"] == ["aa", "aa", "a"]
-
-
-def test_bpe_encode_applies_merges_in_order(spark, docs):
-    merges = TK.bpe_train(docs, n_merges=6)
-    enc = TK.bpe_encode(
-        spark.createDataFrame([("newest",), ("lowest",)],
-                              "word string"), merges)
-    rows = {r["word"]: r["syms"] for r in enc.collect()}
-    ref = {w: list(_apply_ref(w, merges)) for w in rows}
-    assert rows == ref
-
-
-def _apply_ref(word: str, merges):
-    syms = tuple(word)
-    for m in merges:
-        syms = _ref_merge(syms, m["left"], m["right"])
-    return syms
+"""The logistic quality classifier (operators/text.py); cross-engine
+hashes live in test_entry_contract."""
 
 
 def test_quality_classifier_semantics(spark):
