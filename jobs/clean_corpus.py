@@ -6,10 +6,14 @@ the operators a 100 TB pretraining dataset build actually chains.
         [--min-quality 0.5] [--lang en] [--sample 1.0] \\
         [--bucket-cap 1000] [--no-resume]
 
-Stages (all lazy until the single write):
-  1. transitive near-dup components (MinHash-LSH bands, bucket-capped)
+Stages (lazy until the single write, except the components' rounds):
+  1. transitive near-dup components (MinHash-LSH bands, bucket-capped):
+     the edge list is computed once, then label propagation runs one
+     small checkpointed job per round over the changed frontier
   2. keeper per component = highest-quality member
-  3. language + quality gate (corpus_filter semantics)
+  3. language + quality gate (corpus_filter semantics); its row count
+     (_stats "dedup+filter") is observed during the write, not counted
+     by a job of its own
   4. optional deterministic md5-prefix sampling
   5. cleaned corpus written partitioned by xxhash64 doc bucket through
      the bucketed lineage commit (plans/lineage.run_bucketed_write):
@@ -45,7 +49,7 @@ def run(spark, docs, dst: str, min_quality: float = 0.5,
         lang: str = "en", sample: float = 1.0,
         bucket_cap: int = 1000, buckets: int = 32,
         resume: bool = True) -> dict:
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import Observation, Window, functions as F
 
     from ocr_pytorch_spark.operators import dedup as D
     from ocr_pytorch_spark.operators import text as T
@@ -74,7 +78,9 @@ def run(spark, docs, dst: str, min_quality: float = 0.5,
                .join(lng, "doc_id").join(qual, "doc_id")
                .where((F.col("lang_pred") == lang)
                       & (F.col("quality") >= min_quality)))
-    n_dedup_filtered = cleaned.count()
+    # counted by the write itself, above the sampling and bucket filters
+    dedup_filtered = Observation()
+    cleaned = cleaned.observe(dedup_filtered, F.count(F.lit(1)).alias("n"))
 
     if sample < 1.0:
         cut = int(sample * 16 ** 8)
@@ -92,7 +98,9 @@ def run(spark, docs, dst: str, min_quality: float = 0.5,
     commit = L.run_bucketed_write(spark, out, dst, buckets=buckets,
                                   resume=resume, stage="clean_corpus",
                                   payload_col="text")
-    stats = {"input": n_in, "dedup+filter": n_dedup_filtered}
+    # get waits for the write to finish; the write does run, because
+    # committed_run returned above unless some bucket is uncommitted
+    stats = {"input": n_in, "dedup+filter": dedup_filtered.get["n"]}
     stats.update(commit)
     L.write_stats(spark, dst, stats)
     return stats

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from ocr_pytorch_spark.functions import HEX, array_dot, quant4
 from ocr_pytorch_spark.operators.text import word_ngrams
@@ -327,12 +327,19 @@ def dup_components(documents: DataFrame, edges: DataFrame | None = None,
 
     Two algorithms, same output:
 
-    * ``bsp`` (default): min-label propagation — each round joins the
-      symmetrized edge list with current labels and takes the per-node
-      min; the shuffle carries only skinny (doc_id, label) rows and
-      ``localCheckpoint`` truncates per-round lineage.  Rounds needed
-      = graph DIAMETER: right for near-dup graphs (shallow clusters),
-      wrong for long chains.
+    * ``bsp`` (default): semi-naive min-label propagation over the
+      edge endpoints only.  The symmetrized edge list is materialized
+      once (``localCheckpoint``), so the LSH pass that produces it runs
+      once, not once per round.  Each round sends messages only from
+      the frontier — the nodes whose label changed in the previous
+      round — and writes the new (doc_id, component, changed) rows in
+      that round's single checkpoint, whose job also counts the changed
+      rows (an ``Observation``); it stops when no row changed.
+      The labels match full relabelling round for round (an unchanged
+      neighbour's label is already folded in), so the rounds needed
+      are still graph DIAMETER + 1: right for near-dup graphs (shallow
+      clusters), wrong for long chains.  Docs in no edge label
+      themselves in one final left join.
     * ``star``: alternating large-star/small-star (Kiveris et al.,
       "Connected Components in MapReduce and Beyond") — rounds needed
       = O(log diameter), the 10^12-node path; see
@@ -351,33 +358,47 @@ def dup_components(documents: DataFrame, edges: DataFrame | None = None,
         return _star_components(documents, edges, max_iter, stats)
     if algorithm != "bsp":
         raise ValueError(f"unknown algorithm {algorithm!r}")
-    sym = edges.union(
-        edges.select(F.col("doc_b").alias("doc_a"),
-                     F.col("doc_a").alias("doc_b")))
-    labels = documents.select(
-        "doc_id", F.col("doc_id").alias("component")).localCheckpoint()
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        neigh = (sym.join(labels,
-                          sym["doc_a"] == labels["doc_id"])
-                 .select(F.col("doc_b").alias("doc_id"), "component"))
-        new = (labels.select("doc_id", "component").union(neigh)
-               .groupBy("doc_id")
-               .agg(F.min("component").alias("component"))
+    # one pass over ``edges`` emits both directions
+    sym = (edges.select(F.explode(F.array(
+        F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+        F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))))
+        .alias("e")).select("e.src", "e.dst").localCheckpoint())
+
+    def relabel(cur: DataFrame) -> tuple[DataFrame, int]:
+        """Checkpoint (doc_id, component, changed) from ``cur``'s
+        (doc_id, component, msg) rows, counting the changed rows in the
+        same job."""
+        n_changed = Observation()
+        new = (cur.select("doc_id",
+                          F.least("component", "msg").alias("component"),
+                          F.coalesce(F.col("msg") < F.col("component"),
+                                     F.lit(False)).alias("changed"))
+               .observe(n_changed, F.count_if("changed").alias("n"))
                .localCheckpoint())
-        changed = (new.alias("n")
-                   .join(labels.alias("o"), "doc_id")
-                   .where(F.col("n.component") < F.col("o.component"))
-                   .count())
-        labels = new
-        if changed == 0:
-            break
+        return new, n_changed.get["n"]
+
+    # round 1: every endpoint starts labelled with itself, so its
+    # messages are its neighbours' ids
+    labels, changed = relabel(
+        sym.groupBy(F.col("src").alias("doc_id"))
+        .agg(F.min("dst").alias("msg"))
+        .withColumn("component", F.col("doc_id")))
+    rounds = 1
+    while changed and rounds < max_iter:
+        rounds += 1
+        frontier = labels.where("changed").select(
+            F.col("doc_id").alias("src"), "component")
+        msgs = (sym.join(frontier, "src")
+                .groupBy(F.col("dst").alias("doc_id"))
+                .agg(F.min("component").alias("msg")))
+        labels, changed = relabel(labels.join(msgs, "doc_id", "left"))
     if stats is not None:
         stats["rounds"] = rounds
-    return labels.select(
-        "doc_id", "component",
-        (F.col("doc_id") == F.col("component")).alias("is_keeper"))
+    comp = F.coalesce("component", "doc_id")
+    return (documents.select("doc_id")
+            .join(labels.select("doc_id", "component"), "doc_id", "left")
+            .select("doc_id", comp.alias("component"),
+                    (F.col("doc_id") == comp).alias("is_keeper")))
 
 
 def _star_components(documents: DataFrame, edges: DataFrame,

@@ -164,16 +164,19 @@ def word_ngrams(documents: DataFrame, n: int = 3) -> DataFrame:
     shuffles; the old posexplode + positional self-joins moved the
     whole token stream through two exchanges.  Docs with fewer than n
     words yield no grams (same as the join formulation; the DuckDB
-    oracle keeps the unnest+ordinality self-join)."""
+    oracle keeps the unnest+ordinality self-join).  The token array is
+    its own column: written inline, the lambda would re-split the text
+    once per token."""
     from ocr_pytorch_spark.functions import fan_out, words
 
-    ws = words(F.col("text"))
+    ws = F.col("ws")
     grams = F.transform(
         ws, lambda x, i: F.concat_ws(" ", F.slice(ws, i + 1, n)))
     grams = F.slice(grams, 1,
                     F.greatest(F.size(ws) - n + 1, F.lit(0)))
-    return fan_out(documents).select(
-        "doc_id", F.explode(grams).alias("gram"))
+    return (fan_out(documents)
+            .select("doc_id", words(F.col("text")).alias("ws"))
+            .select("doc_id", F.explode(grams).alias("gram")))
 
 
 def fingerprint(documents: DataFrame, n: int = 3) -> DataFrame:

@@ -36,7 +36,10 @@ from __future__ import annotations
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ocr_pytorch_spark.config import PipelineConfig
 from ocr_pytorch_spark.operators.extract import (extract,
@@ -59,20 +62,37 @@ def _exists(spark: SparkSession, path: str) -> bool:
         spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
 
 
-def _read_optional(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """The Parquet table at ``path``, or an empty frame if there is none
-    yet; a table that exists but cannot be read raises."""
+def _read_optional(spark: SparkSession, path: str,
+                   schema: str) -> DataFrame | None:
+    """The Parquet table at ``path``, or None if there is none yet; a
+    table that exists but cannot be read raises."""
     if not _exists(spark, path):
-        return spark.createDataFrame([], schema)
+        return None
     return spark.read.schema(schema).parquet(path)
+
+
+def _write_rows(spark: SparkSession, rows: list[tuple], schema: str,
+                path: str, mode: str = "append") -> None:
+    """Write ``rows`` to ``path`` as one Parquet file with exactly the
+    DDL ``schema``.  The frame is built from an Arrow table, which the
+    JVM reads directly; a Python-list frame would run a Python-worker
+    job to unpickle its rows."""
+    struct = StructType.fromDDL(schema)
+    tbl = pa.Table.from_pylist([dict(zip(struct.names, r)) for r in rows],
+                               to_arrow_schema(struct))
+    (spark.createDataFrame(tbl, struct).coalesce(1)
+     .write.mode(mode).parquet(path))
 
 
 def _lineage_state(spark: SparkSession, dst: str
                    ) -> tuple[set[int], dict[int, int]]:
-    """(committed buckets, last attempt per bucket) from one read."""
-    rows = (_read_optional(spark, os.path.join(dst, "_lineage"),
-                           LINEAGE_SCHEMA)
-            .groupBy("bucket")
+    """(committed buckets, last attempt per bucket) from one read; no
+    Spark job when there is no ``_lineage`` yet."""
+    lineage = _read_optional(spark, os.path.join(dst, "_lineage"),
+                             LINEAGE_SCHEMA)
+    if lineage is None:
+        return set(), {}
+    rows = (lineage.groupBy("bucket")
             .agg(F.bool_or(F.col("status") == "ok").alias("ok"),
                  F.max("attempt").alias("attempt"))
             .collect())
@@ -127,10 +147,10 @@ def _commit(spark: SparkSession, out: DataFrame, dst: str, data_dir: str,
         lineage_rows.append((b, lo, hi, n_docs, "ok", attempt, wall_ms))
         metrics_rows.append((stage, b, n_docs, n_sp, attempt, wall_ms))
     metrics_rows += extra_metrics(max(attempts.values(), default=0) + 1)
-    spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1) \
-        .write.mode("append").parquet(os.path.join(dst, "_lineage"))
-    spark.createDataFrame(metrics_rows, METRICS_SCHEMA).coalesce(1) \
-        .write.mode("append").parquet(os.path.join(dst, "_metrics"))
+    _write_rows(spark, lineage_rows, LINEAGE_SCHEMA,
+                os.path.join(dst, "_lineage"))
+    _write_rows(spark, metrics_rows, METRICS_SCHEMA,
+                os.path.join(dst, "_metrics"))
     return sum(n for _, _, n, _ in stats.values()), wall_ms
 
 
@@ -181,10 +201,9 @@ def committed_run(spark: SparkSession, dst: str, buckets: int,
 
 def write_stats(spark: SparkSession, dst: str, stats: dict) -> None:
     """Replace ``<dst>/_stats`` with the one-row summary ``stats``."""
-    (spark.createDataFrame([tuple(stats.values())],
-                           schema=", ".join(f"`{k}` long" for k in stats))
-        .write.mode("overwrite")
-        .parquet(os.path.join(dst, "_stats")))
+    _write_rows(spark, [tuple(stats.values())],
+                ", ".join(f"`{k}` long" for k in stats),
+                os.path.join(dst, "_stats"), mode="overwrite")
 
 
 def run_extract_job(spark: SparkSession, documents: DataFrame,

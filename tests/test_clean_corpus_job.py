@@ -75,3 +75,46 @@ def test_clean_corpus_job_and_resume(spark, tmp_path_factory):
              buckets=buckets)
     assert s3["docs_processed"] == 0
     assert s3["buckets_skipped"] == buckets
+
+
+def test_dedup_filter_stat_is_exact(spark, tmp_path_factory):
+    """``_stats`` "dedup+filter" counts every row that passed dedup and
+    the gates: all committed rows at sample=1.0, and the same number on
+    a half-committed resume (which writes only the pending buckets) and
+    at sample=0.5 (which writes fewer rows)."""
+    import shutil
+
+    from jobs.clean_corpus import run
+    from ocr_pytorch_spark.plans.lineage import LINEAGE_SCHEMA
+
+    buckets = 8
+    docs = _docs(spark)
+
+    def stat(dst):
+        return spark.read.parquet(
+            os.path.join(dst, "_stats")).first()["dedup+filter"]
+
+    dst = str(tmp_path_factory.mktemp("cc_exact"))
+    s1 = run(spark, docs, dst, min_quality=0.0, lang="en",
+             buckets=buckets)
+    n = s1["dedup+filter"]
+    assert n == s1["docs_processed"] == len(_corpus_rows(spark, dst)) > 0
+    assert stat(dst) == n
+
+    lin = os.path.join(dst, "_lineage")
+    keep = [tuple(r) for r in spark.read.parquet(lin).collect()
+            if r["bucket"] < buckets // 2]
+    shutil.rmtree(lin)
+    spark.createDataFrame(keep, LINEAGE_SCHEMA).coalesce(1) \
+        .write.parquet(lin)
+    s2 = run(spark, docs, dst, min_quality=0.0, lang="en",
+             buckets=buckets)
+    assert s2["buckets_skipped"] == buckets // 2
+    assert 0 < s2["docs_processed"] < n
+    assert s2["dedup+filter"] == stat(dst) == n
+
+    dst_half = str(tmp_path_factory.mktemp("cc_exact_half"))
+    s3 = run(spark, docs, dst_half, min_quality=0.0, lang="en",
+             sample=0.5, buckets=buckets)
+    assert 0 < s3["docs_processed"] < n
+    assert s3["dedup+filter"] == stat(dst_half) == n

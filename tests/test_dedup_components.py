@@ -96,3 +96,56 @@ def test_star_on_fixture_lsh_graph(spark, tmp_path_factory):
     b = dup_components(docs, algorithm="star")
     assert sorted(map(tuple, a.collect())) \
         == sorted(map(tuple, b.collect()))
+
+
+def test_bsp_computes_edges_once(spark):
+    """The edge list is materialized once, not re-derived every round:
+    a Python UDF in the edge plan runs once per edge, however many
+    rounds propagation takes."""
+    from pyspark.sql import functions as F
+
+    tapped = spark.sparkContext.accumulator(0)
+
+    def tap(doc_id):
+        tapped.add(1)
+        return doc_id
+
+    n = 6
+    ids = [f"t{i}" for i in range(n)]
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id string")
+    pairs = [(ids[i], ids[i + 1]) for i in range(n - 1)]
+    edges = (spark.createDataFrame(pairs, "doc_a string, doc_b string")
+             .select(F.udf(tap, "string")("doc_a").alias("doc_a"),
+                     "doc_b"))
+    stats = {}
+    out = dup_components(docs, edges=edges, stats=stats)
+    assert {r["component"] for r in out.collect()} == {"t0"}
+    assert stats["rounds"] >= 3
+    assert tapped.value == len(pairs)
+
+
+def test_bsp_rounds_and_isolated_docs(spark):
+    """A k-node chain takes k rounds (diameter + 1, the last one finding
+    no change); docs in no edge label themselves and are keepers."""
+    k = 7
+    chain = [f"k{i}" for i in range(k)]
+    loose = ["z-iso", "a-iso"]
+    docs = spark.createDataFrame([(i,) for i in chain + loose],
+                                 "doc_id string")
+    edges = spark.createDataFrame(
+        [(chain[i + 1], chain[i]) for i in range(k - 1)],
+        "doc_a string, doc_b string")
+    stats = {}
+    rows = {r["doc_id"]: (r["component"], r["is_keeper"])
+            for r in dup_components(docs, edges=edges,
+                                    stats=stats).collect()}
+    assert stats["rounds"] == k
+    assert rows == {**{d: ("k0", d == "k0") for d in chain},
+                    **{d: (d, True) for d in loose}}
+
+    # no edges at all: one round, every doc its own keeper
+    stats = {}
+    none = dup_components(docs, edges=edges.limit(0), stats=stats)
+    assert stats["rounds"] == 1
+    assert all(r["component"] == r["doc_id"] and r["is_keeper"]
+               for r in none.collect())

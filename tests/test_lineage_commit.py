@@ -70,3 +70,58 @@ def test_extract_job_reads_lineage_once(spark, bundled_weights,
                            buckets=4)
     assert s2["docs_processed"] == 0
     assert len(count_lineage_reads) == 2
+
+
+def test_commit_tables_keep_declared_types(spark, tmp_path):
+    """After a corpus job, ``_lineage``, ``_metrics`` and ``_stats`` read
+    back with exactly their declared column types (int vs bigint), and
+    each append adds one file."""
+    from pyspark.sql.types import LongType, StructType
+
+    from jobs.clean_corpus import run
+
+    rows = [(int(d["doc_id"][4:]),
+             " ".join(s["text"] for s in d["spans"]
+                      if s["kind"] == "text" and s["text"]))
+            for d in datagen.gen_documents(12)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    dst = str(tmp_path)
+
+    def table(name):
+        path = os.path.join(dst, name)
+        return ([(f.name, f.dataType)
+                 for f in spark.read.parquet(path).schema],
+                len([f for f in os.listdir(path)
+                     if f.endswith(".parquet")]))
+
+    def declared(ddl):
+        return [(f.name, f.dataType) for f in StructType.fromDDL(ddl)]
+
+    stats = run(spark, docs, dst, min_quality=0.0, buckets=4)
+    assert table("_lineage") == (declared(L.LINEAGE_SCHEMA), 1)
+    assert table("_metrics") == (declared(L.METRICS_SCHEMA), 1)
+    assert table("_stats") == ([(k, LongType()) for k in stats], 1)
+
+    run(spark, docs, dst, min_quality=0.0, buckets=4, resume=False)
+    assert table("_lineage") == (declared(L.LINEAGE_SCHEMA), 2)
+    assert table("_metrics") == (declared(L.METRICS_SCHEMA), 2)
+    assert table("_stats") == ([(k, LongType()) for k in stats], 1)
+
+
+def test_lineage_state_of_fresh_dst_runs_no_job(spark, tmp_path):
+    sc = spark.sparkContext
+    group = "fresh-lineage-state"
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        before = list(tracker.getJobIdsForGroup(group))
+        assert L._lineage_state(spark, str(tmp_path)) == (set(), {})
+        after = list(tracker.getJobIdsForGroup(group))
+        # control: a job started in this group does show up
+        spark.range(3).collect()
+        control = list(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert after == before == []
+    assert len(control) > len(after)
