@@ -9,7 +9,8 @@ the operators a 100 TB pretraining dataset build actually chains.
 Stages (lazy until the single write, except the components' rounds):
   1. transitive near-dup components (MinHash-LSH bands, bucket-capped):
      the edge list is computed once, then label propagation runs one
-     small checkpointed job per round over the changed frontier
+     small checkpointed job per round over the changed frontier, to
+     its fixed point (graph diameter + 1 rounds, _stats "dedup_rounds")
   2. keeper per component = highest-quality member
   3. language + quality gate (corpus_filter semantics); its row count
      (_stats "dedup+filter") is observed during the write, not counted
@@ -58,12 +59,15 @@ def run(spark, docs, dst: str, min_quality: float = 0.5,
     # short-circuit a fully-committed destination before paying any
     # corpus-global recompute
     if resume and (prior := L.committed_run(
-            spark, dst, buckets, ("input", "dedup+filter"))) is not None:
+            spark, dst, buckets,
+            ("input", "dedup+filter", "dedup_rounds"))) is not None:
         return prior
 
     n_in = docs.count()
 
-    comp = D.dup_components(docs, bucket_cap=bucket_cap)
+    # the label-propagation rounds run here, not in the write
+    cc: dict = {}
+    comp = D.dup_components(docs, bucket_cap=bucket_cap, stats=cc)
     qual = T.quality_score(docs).select("doc_id", "quality")
     lng = T.lang_id(docs).select("doc_id", "lang_pred")
 
@@ -100,7 +104,8 @@ def run(spark, docs, dst: str, min_quality: float = 0.5,
                                   payload_col="text")
     # get waits for the write to finish; the write does run, because
     # committed_run returned above unless some bucket is uncommitted
-    stats = {"input": n_in, "dedup+filter": dedup_filtered.get["n"]}
+    stats = {"input": n_in, "dedup+filter": dedup_filtered.get["n"],
+             "dedup_rounds": cc["rounds"]}
     stats.update(commit)
     L.write_stats(spark, dst, stats)
     return stats

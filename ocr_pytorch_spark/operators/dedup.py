@@ -158,24 +158,6 @@ def simhash(documents: DataFrame, bits: int = 16) -> DataFrame:
     return bit_sums.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-def embedding_neardup_candidates(embeddings: DataFrame,
-                                 n_planes: int | None = None,
-                                 bands: int | None = None,
-                                 dim: int | None = None,
-                                 bucket_cap: int | None = None,
-                                 n_cells: int | None = None,
-                                 n_cell_probe: int = 3) -> DataFrame:
-    """The candidate stage of :func:`embedding_neardup_pairs` —
-    distinct (vec_a, vec_b) pairs sharing a banded sign-projection
-    key within Hamming<=1 multi-probe, optionally restricted to pairs
-    sharing one of their ``n_cell_probe`` nearest IVF cells
-    (``n_cells``).  Split out so scale measurement
-    (scripts/emb_cosine_scale.py) times exactly the shipped stage."""
-    return _neardup_candidate_stream(
-        embeddings, n_planes, bands, dim, bucket_cap, n_cells,
-        n_cell_probe).distinct()
-
-
 def _neardup_candidate_stream(embeddings: DataFrame,
                               n_planes: int | None = None,
                               bands: int | None = None,
@@ -316,48 +298,36 @@ def embedding_neardup_pairs(embeddings: DataFrame,
 
 
 def dup_components(documents: DataFrame, edges: DataFrame | None = None,
-                   max_iter: int = 25,
                    bucket_cap: int | None = None,
-                   algorithm: str = "bsp",
                    stats: dict | None = None) -> DataFrame:
     """Transitive duplicate groups: connected components over the
     near-dup pair graph, so keeper selection works across chains
     (a~b, b~c => one group even when a!~c).  Component id = min doc_id
     reachable.  Output: doc_id, component, is_keeper.
 
-    Two algorithms, same output:
-
-    * ``bsp`` (default): semi-naive min-label propagation over the
-      edge endpoints only.  The symmetrized edge list is materialized
-      once (``localCheckpoint``), so the LSH pass that produces it runs
-      once, not once per round.  Each round sends messages only from
-      the frontier — the nodes whose label changed in the previous
-      round — and writes the new (doc_id, component, changed) rows in
-      that round's single checkpoint, whose job also counts the changed
-      rows (an ``Observation``); it stops when no row changed.
-      The labels match full relabelling round for round (an unchanged
-      neighbour's label is already folded in), so the rounds needed
-      are still graph DIAMETER + 1: right for near-dup graphs (shallow
-      clusters), wrong for long chains.  Docs in no edge label
-      themselves in one final left join.
-    * ``star``: alternating large-star/small-star (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond") — rounds needed
-      = O(log diameter), the 10^12-node path; see
-      ``_star_components``.
+    Semi-naive min-label propagation over the edge endpoints only.  The
+    symmetrized edge list is materialized once (``localCheckpoint``),
+    so the LSH pass that produces it runs once, not once per round.
+    Each round sends messages only from the frontier — the nodes whose
+    label changed in the previous round — and writes the new (doc_id,
+    component, changed) rows in that round's single checkpoint, whose
+    job also counts the changed rows (an ``Observation``).  The labels
+    match full relabelling round for round (an unchanged neighbour's
+    label is already folded in).  The loop runs to its fixed point,
+    which it always reaches because every change strictly lowers a
+    label: graph DIAMETER + 1 rounds — 2-5 on near-dup graphs (shallow
+    clusters), linear on long chains.
+    Docs in no edge label themselves in one final left join.
 
     The driver-side loop itself is how Spark iterative algorithms work
     (GraphX/GraphFrames do the same).  ``stats`` (optional dict) gets
-    ``{"rounds": n}`` for round-count assertions.
+    ``{"rounds": n}``.
 
     The DuckDB oracle is a recursive CTE over the same edges — fully
     SQL-expressible, hash-checked."""
     if edges is None:
         edges = (minhash_lsh_pairs(documents, bucket_cap=bucket_cap)
                  .select("doc_a", "doc_b"))
-    if algorithm == "star":
-        return _star_components(documents, edges, max_iter, stats)
-    if algorithm != "bsp":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     # one pass over ``edges`` emits both directions
     sym = (edges.select(F.explode(F.array(
         F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
@@ -384,7 +354,7 @@ def dup_components(documents: DataFrame, edges: DataFrame | None = None,
         .agg(F.min("dst").alias("msg"))
         .withColumn("component", F.col("doc_id")))
     rounds = 1
-    while changed and rounds < max_iter:
+    while changed:
         rounds += 1
         frontier = labels.where("changed").select(
             F.col("doc_id").alias("src"), "component")
@@ -399,75 +369,6 @@ def dup_components(documents: DataFrame, edges: DataFrame | None = None,
             .join(labels.select("doc_id", "component"), "doc_id", "left")
             .select("doc_id", comp.alias("component"),
                     (F.col("doc_id") == comp).alias("is_keeper")))
-
-
-def _star_components(documents: DataFrame, edges: DataFrame,
-                     max_iter: int, stats: dict | None) -> DataFrame:
-    """large-star/small-star connected components (Kiveris et al. 2014,
-    the production algorithm for 10^12-edge graphs):
-
-    * large-star: every node u links each STRICTLY LARGER neighbor to
-      the minimum of its neighborhood (incl. itself) — long chains
-      collapse geometrically;
-    * small-star: orient edges child>=parent, link each parent-side
-      neighbor (and u itself) to the neighborhood minimum — keeps the
-      forest flat.
-
-    Both steps are one groupBy + one join over skinny 2-column rows —
-    the same per-round shuffle shape as BSP but O(log d) rounds instead
-    of O(d).  Converges when the edge set fixes (every component is a
-    star centered at its minimum).  Output and column contract are
-    identical to the BSP path, so the same DuckDB recursive-CTE oracle
-    hash-checks it."""
-    def _same(a: DataFrame, b: DataFrame) -> bool:
-        return a.exceptAll(b).union(b.exceptAll(a)).isEmpty()
-
-    e = (edges.select(F.col("doc_a").alias("u"),
-                      F.col("doc_b").alias("v"))
-         .where(F.col("u") != F.col("v")).distinct().localCheckpoint())
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        # large-star
-        sym = e.union(e.select(F.col("v").alias("u"),
-                               F.col("u").alias("v")))
-        mins = (sym.groupBy("u").agg(F.min("v").alias("mv"))
-                .select("u", F.least("mv", F.col("u")).alias("m")))
-        e1 = (sym.join(mins, "u")
-              .where(F.col("v") > F.col("u"))
-              .select(F.col("v").alias("u"), F.col("m").alias("v"))
-              .where(F.col("u") != F.col("v")).distinct()
-              .localCheckpoint())
-        # small-star (edges oriented child = max, parent = min)
-        ori = e1.select(F.greatest("u", "v").alias("u"),
-                        F.least("u", "v").alias("v"))
-        mins = ori.groupBy("u").agg(F.min("v").alias("m"))
-        new = (ori.join(mins, "u")
-               .select(F.col("v").alias("u"), F.col("m").alias("v"))
-               .union(mins.select("u", F.col("m").alias("v")))
-               .where(F.col("u") != F.col("v")).distinct()
-               .localCheckpoint())
-        # converged only when BOTH operations left the set invariant
-        # (small-star output can equal large-star output mid-run on a
-        # chain without being a union of stars — comparing only the
-        # two halves of one round terminates early and wrongly)
-        done = _same(e1, e) and _same(new, e1)
-        e = new
-        if done:
-            break
-    if stats is not None:
-        stats["rounds"] = rounds
-    # at convergence e = (child, component_min) stars; isolated docs
-    # label themselves
-    parents = (e.groupBy(F.col("u").alias("doc_id"))
-               .agg(F.min("v").alias("parent")))
-    labels = (documents.select("doc_id")
-              .join(parents, "doc_id", "left")
-              .select("doc_id",
-                      F.coalesce("parent", "doc_id").alias("component")))
-    return labels.select(
-        "doc_id", "component",
-        (F.col("doc_id") == F.col("component")).alias("is_keeper"))
 
 
 def word_sets(documents: DataFrame) -> DataFrame:

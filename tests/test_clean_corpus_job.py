@@ -34,6 +34,7 @@ def test_clean_corpus_job_and_resume(spark, tmp_path_factory):
     import shutil
 
     from jobs.clean_corpus import run
+    from ocr_pytorch_spark.operators.dedup import dup_components
     from ocr_pytorch_spark.plans.lineage import (LINEAGE_SCHEMA,
                                                  committed_buckets)
 
@@ -53,6 +54,9 @@ def test_clean_corpus_job_and_resume(spark, tmp_path_factory):
     assert lin.where(F.col("status") == "ok").count() == buckets
     st = spark.read.parquet(os.path.join(dst_clean, "_stats"))
     assert st.collect()[0]["input"] == 41
+    cc = {}
+    dup_components(docs, bucket_cap=1000, stats=cc)
+    assert st.first()["dedup_rounds"] == cc["rounds"]
 
     # crash simulation: full output, only half the buckets committed
     dst = str(tmp_path_factory.mktemp("cc_crash"))

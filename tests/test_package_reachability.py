@@ -110,7 +110,7 @@ def _named(path: str) -> set[str]:
 
 def test_every_package_function_is_named():
     files = [os.path.join(REPO, "__spark_entry__.py")]
-    for d in (PKG, "jobs", "perfbench", "scripts", "tests"):
+    for d in (PKG, "jobs", "perfbench", "tests"):
         files += glob.glob(os.path.join(REPO, d, "**", "*.py"),
                            recursive=True)
     named = set().union(*map(_named, files))
