@@ -6,9 +6,9 @@ interleaved documents table derived deterministically from
 surface (SURVEY.md §2 SQL analogues + the training-data operators);
 ``oracle_sql()`` gives bit-compatible DuckDB SQL for every
 SQL-expressible query (hashes are md5-hex both sides; float outputs are
-round()ed identically; counts are BIGINT both sides).  OCR/multimodal
-queries are non-SQL-expressible (NumPy model forwards) and omit oracles
--> rows-only checks.
+round()ed identically; counts are BIGINT both sides).  ``ocr_extract``
+is non-SQL-expressible (NumPy model forwards) and omits an oracle ->
+rows-only check.
 """
 
 from __future__ import annotations
@@ -287,227 +287,6 @@ def _png_ocr_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                          .withColumn("side", F.lit("reference_only"))))
 
 
-def _multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-image channel means / gray std / dark fraction through the
-    REAL raw-RGB decode + mapInPandas feature kernel
-    (operators/multimodal.image_features), oracle-checked (r4 VERDICT
-    task 5): the fixture images are integer gradient patterns a SQL
-    engine can regenerate with generate_series, and the kernel
-    accumulates in float64 where uint8 channel sums are exact — so
-    Spark's means equal DuckDB's avg() bit-for-bit and std/dark_frac
-    agree under quant4."""
-    _ship_package(spark)
-    from ocr_pytorch_spark.functions import quant4
-    from ocr_pytorch_spark.operators.multimodal import image_features
-
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                k = int(doc_id)
-                h = 40 + (k % 3) * 12
-                w = 48 + (k % 4) * 16
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                base = 3 * ((r * 2 + c * 5 + k * 7) % 84)
-                img = np.stack([base, base + 3, base + 6],
-                               axis=2).astype(np.uint8)
-                rows.append((f"grad-{k:04d}", h, w, 3, img.tobytes()))
-            yield pd.DataFrame(rows, columns=[
-                "media_ref", "height", "width", "channels", "data"])
-
-    docs = (_t(spark, sf_dir, "documents")
-            .where(F.col("doc_id") < 12).select("doc_id").coalesce(1))
-    images = docs.mapInPandas(
-        synth, "media_ref string, height int, width int, "
-               "channels int, data binary")
-    out = image_features(images)
-    return out.select(
-        "media_ref", "height", "width",
-        *[quant4(F.col(c)).alias(c) for c in
-          ("mean_r", "mean_g", "mean_b", "std_gray", "dark_frac")])
-
-
-def _multimodal_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-dup pairs via dHash banding — ORACLE-BEARING since
-    r6 (r5 VERDICT task 5): the corpus is 6 planted near-dup groups x
-    3 variants whose dHashes are DESIGNED (datagen.neardup_dhash_bits:
-    md5-derived base pattern per group, exact bit flips per variant —
-    within-group Hamming {2,5,5}, cross-group >= 25), and the images
-    are built so the real pixel path (grayscale -> area-resample ->
-    gradient signs, operators/multimodal.dhash_array) reproduces those
-    bits EXACTLY (identity resample at the 8x9 working size, integer
-    steps).  The oracle is the design-derived pair relation computed
-    from the bit patterns alone — fully independent of the image
-    kernel — so the driver hash proves pigeonhole-band recall at
-    radius 6 end-to-end: all 18 within-group pairs found with exact
-    Hamming, zero cross-group leakage.  Flat glyph-image behavior
-    stays covered by tests/test_multimodal.py."""
-    _ship_package(spark)
-    from ocr_pytorch_spark.operators.multimodal import image_neardup_pairs
-
-    def synth(batches):
-        import pandas as pd
-
-        from ocr_pytorch_spark.datagen import neardup_fixture_image
-
-        for pdf in batches:
-            refs, hh, ww, cc, blobs = [], [], [], [], []
-            for gid in pdf["gid"]:
-                g = int(gid)
-                for v in range(3):
-                    img = neardup_fixture_image(g, v)
-                    refs.append(f"nd-{g:02d}-{v}")
-                    hh.append(img.shape[0])
-                    ww.append(img.shape[1])
-                    cc.append(3)
-                    blobs.append(img.tobytes())
-            yield pd.DataFrame({"media_ref": refs, "height": hh,
-                                "width": ww, "channels": cc,
-                                "data": blobs})
-
-    groups = spark.createDataFrame([(g,) for g in range(6)], "gid int")
-    images = groups.mapInPandas(
-        synth, "media_ref string, height int, width int, "
-               "channels int, data binary")
-    return (image_neardup_pairs(images, max_hamming=6)
-            .select("ref_a", "ref_b",
-                    F.col("hamming").cast("int").alias("hamming")))
-
-
-def _multimodal_neardup_oracle_sql() -> str:
-    """Design-derived literal pair relation: pairwise Hamming over the
-    datagen.neardup_dhash_bits patterns (pure Python ints — the image
-    kernel is NOT consulted), keeping pairs within radius 6."""
-    from itertools import combinations
-
-    from ocr_pytorch_spark.datagen import neardup_dhash_bits
-
-    hs = {f"nd-{g:02d}-{v}": neardup_dhash_bits(g, v)
-          for g in range(6) for v in range(3)}
-    rows = [f"('{a}', '{b}', {d})"
-            for (a, ha), (b, hb) in combinations(sorted(hs.items()), 2)
-            if (d := bin(ha ^ hb).count("1")) <= 6]
-    assert len(rows) == 18, "fixture design drifted"
-    return ("SELECT ref_a, ref_b, CAST(hamming AS INTEGER) AS hamming "
-            "FROM (VALUES " + ", ".join(rows)
-            + ") AS t(ref_a, ref_b, hamming)")
-
-
-def _multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio-clip gating features (duration, RMS, ZCR, peak, silence
-    fraction) over real RIFF/PCM WAVs: per-doc integer sawtooth clips
-    are encoded with kernels/wav.encode_wav, decoded back by the same
-    pure-NumPy codec, and reduced by kernels/wav.audio_features — and
-    the whole path is ORACLE-CHECKED (r4 VERDICT task 5): the samples
-    are integer-exact, their squared sums stay below 2^53, so RMS /
-    ZCR / silence_frac computed by NumPy equal DuckDB recomputing the
-    identical waveform with generate_series, bit-for-bit (quant4 on
-    the ratio columns).  One poisoned clip exercises the error row,
-    which the oracle carries as a literal."""
-    _ship_package(spark)
-    from ocr_pytorch_spark.functions import quant4
-    from ocr_pytorch_spark.operators.multimodal import audio_clip_features
-
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ocr_pytorch_spark.kernels.wav import encode_wav
-
-        for pdf in batches:
-            refs, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                k = int(doc_id)
-                n = 4000 + (k % 5) * 512
-                per = 25 + (k % 7) * 8
-                amp = 6000 + (k % 3) * 3000
-                i = np.arange(n, dtype=np.int64)
-                x = ((i % per) * 2 * amp) // (per - 1) - amp
-                if k % 8 == 0:  # leading silence block (2 frames)
-                    x[:1024] = 0
-                refs.append(f"wav-{k:04d}")
-                blobs.append(encode_wav(x.astype(np.int16)))
-            # exactly once, not per Arrow batch: anchor to doc 0
-            if (pdf["doc_id"] == 0).any():
-                refs.append("wav-poison")
-                blobs.append(b"RIFFnope")
-            yield pd.DataFrame({"media_ref": refs, "data": blobs})
-
-    docs = (_t(spark, sf_dir, "documents")
-            .where(F.col("doc_id") < 24).select("doc_id").coalesce(1))
-    audio = docs.mapInPandas(synth, "media_ref string, data binary")
-    out = audio_clip_features(audio)
-    return out.select(
-        "media_ref", "sample_rate",
-        quant4(F.col("duration_sec")).alias("duration_sec"),
-        quant4(F.col("rms")).alias("rms"),
-        quant4(F.col("zcr")).alias("zcr"),
-        F.col("peak"),
-        quant4(F.col("silence_frac")).alias("silence_frac"))
-
-
-def _multimodal_audio_neardup(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """Audio near-dup pairs via spectral-fingerprint banding —
-    ORACLE-BEARING since r6 (closes the second half of r5 VERDICT
-    task 5, the multimodal_neardup pattern): clips are synthesized so
-    the REAL path (WAV encode -> decode -> framed FFT -> band/chunk
-    pooling -> sign bits, kernels/wav.spectral_hash) reproduces
-    md5-designed 64-bit patterns EXACTLY (frame-aligned integer-bin
-    tones, 8 hot bands per time chunk — see datagen.audio_neardup_*),
-    with designed within-group Hamming {2,4,6} and cross-group >= 20.
-    The oracle is the pair relation computed from the bit patterns
-    alone (audio kernel not consulted), so the driver hash proves
-    pigeonhole-band recall at radius 6 end-to-end: all 18 within-
-    group pairs with exact Hamming, zero cross-group leakage."""
-    _ship_package(spark)
-    from ocr_pytorch_spark.operators.multimodal import audio_neardup_pairs
-
-    def synth(batches):
-        import pandas as pd
-
-        from ocr_pytorch_spark.datagen import audio_neardup_clip
-        from ocr_pytorch_spark.kernels.wav import encode_wav
-
-        for pdf in batches:
-            refs, blobs = [], []
-            for gid in pdf["gid"]:
-                g = int(gid)
-                for v in range(3):
-                    refs.append(f"au-{g:02d}-{v}")
-                    blobs.append(encode_wav(audio_neardup_clip(g, v)))
-            yield pd.DataFrame({"media_ref": refs, "data": blobs})
-
-    groups = spark.createDataFrame([(g,) for g in range(6)], "gid int")
-    audio = groups.mapInPandas(synth, "media_ref string, data binary")
-    return (audio_neardup_pairs(audio, max_hamming=6)
-            .select("ref_a", "ref_b",
-                    F.col("hamming").cast("int").alias("hamming")))
-
-
-def _multimodal_audio_neardup_oracle_sql() -> str:
-    """Design-derived literal pair relation: pairwise Hamming over the
-    datagen.audio_neardup_bits patterns (pure Python ints — the audio
-    kernel is NOT consulted), keeping pairs within radius 6."""
-    from itertools import combinations
-
-    from ocr_pytorch_spark.datagen import audio_neardup_bits
-
-    hs = {f"au-{g:02d}-{v}": audio_neardup_bits(g, v)
-          for g in range(6) for v in range(3)}
-    rows = [f"('{a}', '{b}', {d})"
-            for (a, ha), (b, hb) in combinations(sorted(hs.items()), 2)
-            if (d := bin(ha ^ hb).count("1")) <= 6]
-    assert len(rows) == 18, "fixture design drifted"
-    return ("SELECT ref_a, ref_b, CAST(hamming AS INTEGER) AS hamming "
-            "FROM (VALUES " + ", ".join(rows)
-            + ") AS t(ref_a, ref_b, hamming)")
-
-
 def _text_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """zlib compression-ratio quality signal — ORACLE-BEARING since r6
     (r5 VERDICT task 4): DuckDB has no compressor, but zlib is
@@ -576,68 +355,6 @@ def _text_compression_oracle_sql() -> str:
         "doc_id, n_chars, n_compressed, compression_ratio)")
 
 
-def _multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video path, ORACLE-CHECKED (r4 VERDICT task 5): per-doc
-    BI_RGB (raw DIB) AVI containers — bottom-up BGR rows, 4-byte row
-    padding, strf-driven codec dispatch in kernels/avi.py — are
-    container-walked, every-2nd frame sampled + decoded losslessly,
-    and each sampled frame reduced by the image_features kernel.
-    Frame pixels are integer gradients, so frame indices, dims and
-    channel means are recomputable in DuckDB with generate_series
-    (quant4 on std_gray).  The MJPEG codec + poison-row path stays
-    driver-exercised under multimodal_video_mjpeg."""
-    _ship_package(spark)
-    from ocr_pytorch_spark.functions import quant4
-    from ocr_pytorch_spark.operators.multimodal import (
-        image_features, video_frame_sample)
-
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ocr_pytorch_spark.kernels.avi import encode_avi
-
-        for pdf in batches:
-            refs, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                k = int(doc_id)
-                n_frames = 3 + k % 4
-                h = 24 + (k % 2) * 8
-                w = 33 + (k % 3) * 5  # odd widths: DIB row padding
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                frames = []
-                for f in range(n_frames):
-                    base = 3 * ((r + c * 2 + f * 5 + k * 7) % 84)
-                    frames.append(np.stack(
-                        [base, base + 3, base + 6],
-                        axis=2).astype(np.uint8))
-                refs.append(f"avi-{k:02d}")
-                blobs.append(encode_avi(frames, fps=4, codec="rgb"))
-            yield pd.DataFrame({"media_ref": refs, "data": blobs})
-
-    docs = (_t(spark, sf_dir, "documents")
-            .where(F.col("doc_id") < 8).select("doc_id").coalesce(1))
-    videos = docs.mapInPandas(synth, "media_ref string, data binary")
-    sampled = video_frame_sample(videos, every_n=2)
-    tagged = sampled.where(F.col("frame_idx") >= 0).select(
-        F.concat_ws("#", "media_ref",
-                    F.col("frame_idx").cast("string"))
-        .alias("media_ref"),
-        "height", "width", F.lit(3).alias("channels"), "data")
-    feats = image_features(tagged)
-    return feats.select(
-        F.substring_index("media_ref", "#", 1).alias("media_ref"),
-        F.element_at(F.split("media_ref", "#"), 2).cast("int")
-        .alias("frame_idx"),
-        "height", "width",
-        quant4(F.col("mean_r")).alias("mean_r"),
-        quant4(F.col("mean_g")).alias("mean_g"),
-        quant4(F.col("mean_b")).alias("mean_b"),
-        quant4(F.col("std_gray")).alias("std_gray"),
-        quant4(F.col("dark_frac")).alias("dark_frac"))
-
-
 def _semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup over the embeddings table PLUS 48 planted near-
     duplicates (deterministic md5-derived jitter, the same expression
@@ -674,98 +391,6 @@ def _semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                             tau=0.9)
 
 
-def _multimodal_video_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MJPEG-AVI frame sampling as a PARITY surface — ORACLE-BEARING
-    since r6 (the png_ocr_extract empty-anti-join pattern): clips are
-    synthesized per fixture image (3 frames: base + 2 augment-chain
-    variants, encoded by kernels/avi.py through the in-repo JPEG
-    encoder), every-2nd frame container-sliced and decoded by the
-    distributed operator (multimodal.video_frame_sample); the
-    EXPECTED side skips the container entirely — per-frame
-    encode_jpeg -> decode_jpeg on the sampled indices {0, 2} — so the
-    anti-join proves the AVI container round trip is byte-lossless
-    w.r.t. the embedded JPEG blobs and the sampler picks exactly the
-    advertised frames.  Both sides run executor-side (same BLAS
-    family, the r4 lesson), compare by frame md5 so only ~100-byte
-    rows cross the exchange, and the poisoned container's error row
-    must match too.  DuckDB oracle = the typed empty relation."""
-    _ship_package(spark)
-    from ocr_pytorch_spark.operators.multimodal import video_frame_sample
-
-    POISON = b"RIFF\x04\x00\x00\x00AVI "
-
-    def synth(batches):
-        import pandas as pd
-
-        from ocr_pytorch_spark import datagen
-        from ocr_pytorch_spark.kernels.augment import (
-            adjust_brightness, gaussian_blur)
-        from ocr_pytorch_spark.kernels.avi import encode_avi
-
-        for pdf in batches:
-            refs, blobs = [], []
-            for ref in pdf["media_ref"]:
-                img, _ = datagen.gen_image_array(ref)
-                frames = [img, adjust_brightness(img, 0.8),
-                          gaussian_blur(img, 1.0)]
-                refs.append(f"avi-{ref}")
-                blobs.append(encode_avi(frames, fps=4))
-            if (pdf["media_ref"] == "img-td-0000").any():
-                refs.append("avi-poison")
-                blobs.append(POISON)
-            yield pd.DataFrame({"media_ref": refs, "data": blobs})
-
-    def expected_rows(batches):
-        import hashlib
-
-        import pandas as pd
-
-        from ocr_pytorch_spark import datagen
-        from ocr_pytorch_spark.kernels.augment import (
-            adjust_brightness, gaussian_blur)
-        from ocr_pytorch_spark.kernels.avi import decode_avi_frames
-        from ocr_pytorch_spark.kernels.jpeg import decode_jpeg, encode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"]:
-                img, _ = datagen.gen_image_array(ref)
-                frames = [img, adjust_brightness(img, 0.8),
-                          gaussian_blur(img, 1.0)]
-                for idx in (0, 2):  # every-2nd of 3, sans container
-                    arr = decode_jpeg(encode_jpeg(frames[idx],
-                                                  quality=90))
-                    rows.append((f"avi-{ref}", idx, arr.shape[0],
-                                 arr.shape[1],
-                                 hashlib.md5(arr.tobytes()).hexdigest()))
-                if ref == "img-td-0000":
-                    try:
-                        list(decode_avi_frames(POISON, 2))
-                    except Exception as exc:
-                        msg = f"{type(exc).__name__}: {exc}"[:200]
-                        rows.append(("avi-poison", -1, -1, -1,
-                                     hashlib.md5(msg.encode())
-                                     .hexdigest()))
-            yield pd.DataFrame(rows, columns=[
-                "media_ref", "frame_idx", "height", "width",
-                "frame_md5"])
-
-    base = spark.createDataFrame(
-        [(f"img-td-{i:04d}",) for i in range(8)], "media_ref string")
-    videos = base.coalesce(1).mapInPandas(
-        synth, "media_ref string, data binary")
-    actual = (video_frame_sample(videos, every_n=2)
-              .select("media_ref", "frame_idx", "height", "width",
-                      F.md5(F.col("data")).alias("frame_md5")))
-    expected = base.coalesce(1).mapInPandas(
-        expected_rows, "media_ref string, frame_idx int, height int, "
-                       "width int, frame_md5 string")
-    return (actual.exceptAll(expected)
-            .withColumn("side", F.lit("pipeline_only"))
-            .unionByName(expected.exceptAll(actual)
-                         .withColumn("side", F.lit("expected_only"))))
-
-
 def _ocr_errors_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K3 error sink as a query surface: a corpus with one poisoned
     image (truncated bytes) yields per-image error rows instead of a
@@ -798,46 +423,6 @@ def _ocr_errors_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ocr_errors(spans).select(
         "media_ref",
         F.split(F.col("error"), ":").getItem(0).alias("error_class"))
-
-
-def _multimodal_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image dedup keys through the REAL dHash path
-    (grayscale -> area-resample to 9x8 -> horizontal-gradient sign
-    bits, operators/multimodal.dhash_array) — ORACLE-BEARING since r5:
-    the fixture is a 64x72 integer gradient, so every stage is exact
-    integer arithmetic DuckDB reproduces (8x8 block sums are dyadic
-    /64 means — exact in float32; numpy's round-half-EVEN rint is
-    replicated from the integer block sum: tie iff sum%64==32, then
-    nearest even; bit 63 maps to -(2^63) for two's-complement
-    parity).  Glyph-image dHash stays driver-exercised inside
-    multimodal_neardup."""
-    _ship_package(spark)
-    from ocr_pytorch_spark.operators.multimodal import image_dhash
-
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                k = int(doc_id)
-                r = np.arange(64, dtype=np.int64)[:, None]
-                c = np.arange(72, dtype=np.int64)[None, :]
-                base = 3 * ((r * 2 + c * 5 + k * 7) % 84)
-                img = np.stack([base, base + 3, base + 6],
-                               axis=2).astype(np.uint8)
-                rows.append((f"grad64-{k:04d}", 64, 72, 3,
-                             img.tobytes()))
-            yield pd.DataFrame(rows, columns=[
-                "media_ref", "height", "width", "channels", "data"])
-
-    docs = (_t(spark, sf_dir, "documents")
-            .where(F.col("doc_id") < 10).select("doc_id").coalesce(1))
-    images = docs.mapInPandas(
-        synth, "media_ref string, height int, width int, "
-               "channels int, data binary")
-    return image_dhash(images)
 
 
 # --- queries -----------------------------------------------------------
@@ -1702,14 +1287,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "approx_distinct": approx_distinct,
         # non-SQL-expressible (NumPy model forwards) -> rows-only checks
         "ocr_extract": _ocr_extract,
-        "multimodal_features": _multimodal_features,
-        "multimodal_dhash": _multimodal_dhash,
-        "multimodal_neardup": _multimodal_neardup,
-        "multimodal_audio": _multimodal_audio,
-        "multimodal_video": _multimodal_video,
-        "multimodal_video_mjpeg": _multimodal_video_mjpeg,
-        # oracle-bearing since r6 (designed fixture, literal oracle):
-        "multimodal_audio_neardup": _multimodal_audio_neardup,
+        # oracle-bearing since r6 (literal oracle):
         "text_compression": _text_compression,
         "ocr_errors_scan": _ocr_errors_scan,
         "png_ocr_extract": _png_ocr_extract,
@@ -1966,19 +1544,20 @@ _PINNED = ["ocr_extract_parity"]
 # EVEN extraction veterans into the new suite_extraction — 50 members
 # across 7 suites):
 #   * _PINNED (1): the flagship parity key, EVERY round.
-#   * _ROT_ODD (36 = 31 singles + 5 suites) / _ROT_EVEN (33 = 31
+#   * _ROT_ODD (32 = 27 singles + 5 suites) / _ROT_EVEN (30 = 28
 #     singles + suite_web_hygiene + suite_extraction): every 2
 #     rounds.  Suites debut in the parity leading their landing round
 #     OR mechanically (never-checked keys always sort into the next
 #     window); all folded members were green <= 2 rounds before their
 #     suite's first check, so every gap stays within cadence.
-# Window arithmetic: odd rounds 1 + 36 = 37, even rounds 1 + 33 = 34,
-# no declared debuts — 13 free slots in odd rounds and 16 in even
-# rounds.  tests/test_html.py asserts >= 5 free
-# slots in BOTH parities (headroom, not just fit) and that the window
-# still holds every lead key even with every never-checked key
-# mechanically promoted (none at present), so new keys for the next
-# several rounds are plain appends — no cascade.
+# Window arithmetic: odd rounds 1 + 32 = 33, even rounds 1 + 30 = 31,
+# no declared debuts — 17 free slots in odd rounds and 19 in even
+# rounds.
+# tests/test_html.py asserts >= 5 free slots in BOTH parities
+# (headroom, not just fit) and that the window still holds every lead
+# key even with every never-checked key mechanically promoted (none
+# at present), so new keys for the next several rounds are plain
+# appends — no cascade.
 # Suite members are excluded from the window by _rotate() and ordered
 # after it; rows-only keys trail last.  Steady state: every oracle
 # key (or its certifying suite) every 2 rounds.
@@ -2011,9 +1590,7 @@ _ROT_ODD = [
     "data_quality_checks",
     "group_linefit_regr", "range_self_join",
     # r6 rebalance: r5 debuts fold here (checked r5 as debuts -> r7)
-    "multimodal_features", "multimodal_audio", "multimodal_video",
     "semdedup", "boilerplate_blocks", "ocr_errors_scan",
-    "multimodal_dhash",
     # semi_join_keep / broadcast_dim_join / explode_reassemble /
     # tpch_q1 folded into suite_joins_tpch (r7 second pass)
     # r7 restructure: the composite suites debut here (round 7 is
@@ -2056,8 +1633,7 @@ _ROT_EVEN = [
     "doc_chunks", "lm_perplexity",
     # r6 oracle upgrades, folded directly into the even group (their
     # debut round 6 is even — see CAPACITY NOTE above):
-    "text_compression", "multimodal_neardup", "png_ocr_extract",
-    "multimodal_audio_neardup", "multimodal_video_mjpeg",
+    "text_compression", "png_ocr_extract",
     # demoted from _PINNED in r6 (see CAPACITY NOTE above):
     "salted_join",
     # r9 fold of the r8 debuts (r8 VERDICT task 1), even slice —
@@ -2401,21 +1977,10 @@ def oracle_sql() -> dict[str, str]:
         "lm_perplexity": _TXT.lm_perplexity_oracle_sql(),
         # r6 oracle upgrades (r5 VERDICT tasks 4+5)
         "text_compression": _text_compression_oracle_sql(),
-        "multimodal_neardup": _multimodal_neardup_oracle_sql(),
-        "multimodal_audio_neardup":
-            _multimodal_audio_neardup_oracle_sql(),
         "png_ocr_extract": """
             SELECT CAST(NULL AS VARCHAR) AS media_ref,
                    CAST(NULL AS INT) AS box_order,
                    CAST(NULL AS VARCHAR) AS text,
-                   CAST(NULL AS VARCHAR) AS side
-            WHERE FALSE""",
-        "multimodal_video_mjpeg": """
-            SELECT CAST(NULL AS VARCHAR) AS media_ref,
-                   CAST(NULL AS INT) AS frame_idx,
-                   CAST(NULL AS INT) AS height,
-                   CAST(NULL AS INT) AS width,
-                   CAST(NULL AS VARCHAR) AS frame_md5,
                    CAST(NULL AS VARCHAR) AS side
             WHERE FALSE""",
         "project_bbox_decode": """
@@ -3598,155 +3163,9 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, min(md5(gram)) AS fp_min,
                    max(md5(gram)) AS fp_max
             FROM grams GROUP BY doc_id""",
-        # --- multimodal reductions (r4 VERDICT task 5): the fixtures
-        # are integer patterns DuckDB regenerates with generate_series;
-        # WAV samples decode to x/32768 (power-of-two, exact in
-        # float32/64) and all channel/sample sums stay below 2^53, so
-        # the real codec + mapInPandas kernel path hash-matches SQL ---
-        "multimodal_dhash": """
-            WITH ks AS (SELECT doc_id AS k FROM documents
-                        WHERE doc_id < 10),
-            px AS (SELECT ks.k, rr.r AS r, cc.c AS c,
-                    3 * ((rr.r * 2 + cc.c * 5 + ks.k * 7) % 84) + 3
-                      AS g
-                   FROM ks,
-                        LATERAL unnest(generate_series(0, 63)) rr(r),
-                        LATERAL unnest(generate_series(0, 71)) cc(c)),
-            cells AS (SELECT k, r // 8 AS R, c // 8 AS C,
-                             sum(g) AS s
-                      FROM px GROUP BY k, r // 8, c // 8),
-            cellv AS (SELECT k, R, C,
-                       CASE WHEN s % 64 = 32
-                            THEN (s // 64) + ((s // 64) % 2)
-                            ELSE CAST(floor(s / 64.0 + 0.5) AS BIGINT)
-                       END AS v
-                      FROM cells),
-            bits AS (SELECT a.k, a.R * 8 + a.C AS i,
-                           CASE WHEN b.v > a.v THEN 1 ELSE 0 END
-                             AS bit
-                     FROM cellv a JOIN cellv b
-                       ON a.k = b.k AND a.R = b.R AND b.C = a.C + 1)
-            SELECT 'grad64-' || lpad(CAST(k AS VARCHAR), 4, '0')
-                     AS media_ref,
-                   CAST(sum(CASE
-                     WHEN bit = 1 AND i = 63
-                       THEN -9223372036854775808
-                     WHEN bit = 1 THEN (1::BIGINT << CAST(i AS INT))
-                     ELSE 0 END) AS BIGINT) AS dhash
-            FROM bits GROUP BY k""",
         "ocr_errors_scan": """
             SELECT 'img-poison' AS media_ref,
                    'ValueError' AS error_class""",
-        "multimodal_audio": """
-            WITH ks AS (SELECT doc_id AS k FROM documents
-                        WHERE doc_id < 24),
-            par AS (SELECT k, 4000 + (k % 5) * 512 AS n,
-                           25 + (k % 7) * 8 AS per,
-                           6000 + (k % 3) * 3000 AS amp FROM ks),
-            s AS (
-              SELECT p.k, p.n, i.i,
-                     CASE WHEN p.k % 8 = 0 AND i.i < 1024 THEN 0
-                          ELSE ((i.i % p.per) * 2 * p.amp)
-                               // (p.per - 1) - p.amp
-                     END AS x
-              FROM par p,
-                   LATERAL unnest(generate_series(0, p.n - 1)) AS i(i)
-            ),
-            lagged AS (
-              SELECT k, n, i, x,
-                     lag(x) OVER (PARTITION BY k ORDER BY i) AS px
-              FROM s
-            ),
-            base AS (
-              SELECT k, n,
-                     sqrt(avg((x / 32768.0) * (x / 32768.0))) AS rms,
-                     sum(CASE WHEN px IS NOT NULL
-                               AND (x < 0) <> (px < 0)
-                              THEN 1 ELSE 0 END)
-                       / CAST(n AS DOUBLE) AS zcr,
-                     max(abs(x)) / 32768.0 AS peak
-              FROM lagged GROUP BY k, n
-            ),
-            fr AS (
-              SELECT k, i // 512 AS f,
-                     sqrt(avg((x / 32768.0) * (x / 32768.0))) AS frms
-              FROM s WHERE i < (n // 512) * 512
-              GROUP BY k, i // 512
-            ),
-            sil AS (
-              SELECT k, sum(CASE WHEN frms < 0.01 THEN 1 ELSE 0 END)
-                         / CAST(count(*) AS DOUBLE) AS silence_frac
-              FROM fr GROUP BY k
-            )
-            SELECT 'wav-' || lpad(CAST(b.k AS VARCHAR), 4, '0')
-                     AS media_ref,
-                   16000 AS sample_rate,
-                   floor((CAST(b.n AS DOUBLE) / 16000) * 10000 + 0.5)
-                     / 10000 AS duration_sec,
-                   floor(b.rms * 10000 + 0.5) / 10000 AS rms,
-                   floor(b.zcr * 10000 + 0.5) / 10000 AS zcr,
-                   b.peak AS peak,
-                   floor(sil.silence_frac * 10000 + 0.5) / 10000
-                     AS silence_frac
-            FROM base b JOIN sil USING (k)
-            UNION ALL
-            SELECT 'wav-poison', -1, 0.0, 0.0, 0.0, 0.0, 1.0""",
-        "multimodal_features": """
-            WITH ks AS (SELECT doc_id AS k FROM documents
-                        WHERE doc_id < 12),
-            dims AS (SELECT k, 40 + (k % 3) * 12 AS h,
-                            48 + (k % 4) * 16 AS w FROM ks),
-            px AS (
-              SELECT d.k, d.h, d.w,
-                     3 * ((rr.r * 2 + cc.c * 5 + d.k * 7) % 84) AS base
-              FROM dims d,
-                   LATERAL unnest(generate_series(0, d.h - 1)) AS rr(r),
-                   LATERAL unnest(generate_series(0, d.w - 1)) AS cc(c)
-            )
-            SELECT 'grad-' || lpad(CAST(k AS VARCHAR), 4, '0')
-                     AS media_ref,
-                   CAST(h AS INT) AS height, CAST(w AS INT) AS width,
-                   floor(avg(base + 0) * 10000 + 0.5) / 10000 AS mean_r,
-                   floor(avg(base + 3) * 10000 + 0.5) / 10000 AS mean_g,
-                   floor(avg(base + 6) * 10000 + 0.5) / 10000 AS mean_b,
-                   floor(sqrt(avg((base + 3.0) * (base + 3.0))
-                              - avg(base + 3.0) * avg(base + 3.0))
-                         * 10000 + 0.5) / 10000 AS std_gray,
-                   floor((sum(CASE WHEN base + 3 < 100 THEN 1 ELSE 0
-                              END) / CAST(count(*) AS DOUBLE))
-                         * 10000 + 0.5) / 10000 AS dark_frac
-            FROM px GROUP BY k, h, w""",
-        "multimodal_video": """
-            WITH ks AS (SELECT doc_id AS k FROM documents
-                        WHERE doc_id < 8),
-            par AS (SELECT k, 3 + k % 4 AS nf, 24 + (k % 2) * 8 AS h,
-                           33 + (k % 3) * 5 AS w FROM ks),
-            fr AS (SELECT p.k, p.h, p.w, ff.f
-                   FROM par p,
-                        LATERAL unnest(generate_series(0, p.nf - 1, 2))
-                          AS ff(f)),
-            px AS (SELECT fr.k, fr.f, fr.h, fr.w,
-                          3 * ((rr.r + cc.c * 2 + fr.f * 5 + fr.k * 7)
-                               % 84) AS base
-                   FROM fr,
-                        LATERAL unnest(generate_series(0, fr.h - 1))
-                          AS rr(r),
-                        LATERAL unnest(generate_series(0, fr.w - 1))
-                          AS cc(c))
-            SELECT 'avi-' || lpad(CAST(k AS VARCHAR), 2, '0')
-                     AS media_ref,
-                   CAST(f AS INT) AS frame_idx,
-                   CAST(h AS INT) AS height, CAST(w AS INT) AS width,
-                   floor(avg(base + 0) * 10000 + 0.5) / 10000 AS mean_r,
-                   floor(avg(base + 3) * 10000 + 0.5) / 10000 AS mean_g,
-                   floor(avg(base + 6) * 10000 + 0.5) / 10000 AS mean_b,
-                   floor(sqrt(avg((base + 3.0) * (base + 3.0))
-                              - avg(base + 3.0) * avg(base + 3.0))
-                         * 10000 + 0.5) / 10000 AS std_gray,
-                   floor((sum(CASE WHEN base + 3 < 100 THEN 1 ELSE 0
-                              END) / CAST(count(*) AS DOUBLE))
-                         * 10000 + 0.5) / 10000 AS dark_frac
-            FROM px GROUP BY k, f, h, w""",
     }
     # gate-ablation Venn composes three member oracles as subqueries
     sqls["gate_ablation"] = f"""

@@ -150,6 +150,7 @@ def main() -> None:
                 args.max_top_bigram_frac, args.min_words,
                 buckets=args.buckets, resume=not args.no_resume)
     print(json.dumps(stats))
+    spark.stop()
 
 
 if __name__ == "__main__":

@@ -16,8 +16,7 @@ over Iceberg/Parquet tables of interleaved text+media documents:
 
 Alongside the extraction pipeline, :mod:`ocr_pytorch_spark.operators`
 ships the large-scale training-data operators (dedup, similarity search,
-text quality, multimodal plumbing) needed to run this engine as a
-web-scale data pipeline.
+text quality) needed to run this engine as a web-scale data pipeline.
 """
 
 import os as _os

@@ -1,12 +1,12 @@
 """Pipeline constants mirroring the reference's semantics.
 
-Every constant cites where the reference pins it (file:line under
-/root/reference).  ``PipelineConfig`` carries the handful of knobs that are
-scale parameters rather than semantics; the defaults reproduce the
-reference, the ``fixture()`` profile shrinks the detect height so the full
-VGG16 forward is tractable on synthetic CI-scale images (the *semantics* —
-resize to a fixed height, stride-16 anchors, thresholds — are unchanged;
-oracle and Spark pipeline always share one config, so parity is exact).
+Every constant cites where the reference pins it (file:line in the
+reference repo).  ``PipelineConfig`` carries the one scale parameter, the
+detect height: the default reproduces the reference, and the ``fixture()``
+profile shrinks it so the full VGG16 forward is tractable on synthetic
+CI-scale images (the *semantics* — resize to a fixed height, stride-16
+anchors, thresholds — are unchanged; oracle and Spark pipeline always share
+one config, so parity is exact).
 """
 
 from __future__ import annotations
@@ -42,7 +42,8 @@ MAX_HORIZONTAL_GAP = 60
 MIN_V_OVERLAPS = 0.6
 MIN_SIZE_SIM = 0.6
 
-# Post-connector horizontal expansion in px (detect/ctpn_predict.py:79-84).
+# Post-connector horizontal expansion in px, always applied: the reference's
+# get_det_boxes(expand=True) default (detect/ctpn_predict.py:38,79-84).
 EXPAND_X = 10
 
 # --- recognition (reference: recognize/config.py, crnn_recognizer.py) ---
@@ -56,14 +57,9 @@ CRNN_HIDDEN = 256
 
 @dataclass(frozen=True)
 class PipelineConfig:
-    """Scale knobs shared by the oracle and the Spark pipeline."""
+    """The scale parameter shared by the oracle and the Spark pipeline."""
 
     detect_height: int = DETECT_HEIGHT
-    prob_thresh: float = PROB_THRESH
-    nms_thresh: float = NMS_THRESH
-    min_box_size: int = MIN_BOX_SIZE
-    expand: bool = True  # get_det_boxes(expand=True) default, applied (ctpn_predict.py:38,79)
-    adjust: bool = False  # charRec(adjust=False) — ocr.py:77 calls with default
     # NOTE: Arrow batch size (images per pandas batch in the OCR UDF) is
     # a session-level knob: spark.sql.execution.arrow.maxRecordsPerBatch
     # (set in sources/session.py), not a per-pipeline field.

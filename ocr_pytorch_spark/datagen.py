@@ -232,107 +232,3 @@ def compression_fixture_text(k: int) -> str:
             out.append(cur.hex())
         return "".join(out)
     return (f"the quick brown fox {k} jumps over the lazy dog. ") * 12
-
-
-_NEARDUP_FLIPS = {0: (), 1: (7, 21), 2: (7, 33, 40, 52, 61)}
-
-
-def neardup_dhash_bits(g: int, v: int) -> int:
-    """Designed 64-bit dHash for near-dup fixture group g, variant v:
-    an md5-derived base pattern per group, with variant-specific bit
-    flips giving exact within-group Hamming distances d(0,1)=2,
-    d(0,2)=5, d(1,2)=5 (all <= radius 6); distinct-group base
-    patterns differ by ~32 md5 bits, far beyond the radius."""
-    base = int.from_bytes(
-        hashlib.md5(f"ndgrp-{g}".encode()).digest()[:8], "little")
-    for b in _NEARDUP_FLIPS[v]:
-        base ^= 1 << b
-    return base
-
-
-def neardup_fixture_image(g: int, v: int) -> np.ndarray:
-    """(8, 9, 3) uint8 image whose dHash is EXACTLY
-    neardup_dhash_bits(g, v): at the 8x9 dHash working size the
-    area-resample is the identity, all three channels are equal so
-    grayscale is exact, and each horizontal step is +-10 around 100 —
-    bit i (= r*8 + c) is the sign of px[r, c+1] - px[r, c]."""
-    bits = neardup_dhash_bits(g, v)
-    img = np.zeros((8, 9), dtype=np.int64)
-    img[:, 0] = 100
-    for r in range(8):
-        for c in range(8):
-            step = 10 if (bits >> (r * 8 + c)) & 1 else -10
-            img[r, c + 1] = img[r, c] + step
-    return np.repeat(img.astype(np.uint8)[:, :, None], 3, axis=2)
-
-
-def audio_neardup_bits(g: int, v: int) -> int:
-    """Designed 64-bit spectral fingerprint for audio near-dup fixture
-    group ``g``, variant ``v`` — the audio analogue of
-    ``neardup_dhash_bits``.  Layout matches ``kernels.wav.
-    spectral_hash`` (frame=512, 16 linear bands x 4 time chunks; bit
-    i = chunk*16 + band): per chunk an md5-derived choice of EXACTLY
-    8 hot bands (half hot keeps the clip-mean threshold centred with
-    ~2x sign margins both ways).  Variants swap one hot band for one
-    cold band in designated chunks, so within-group Hamming is exact
-    by construction: d(0,1)=2, d(0,2)=4, d(1,2)=6 (all <= radius 6);
-    cross-group base patterns differ by ~30 md5 bits."""
-    hot: list[list[int]] = []
-    for c in range(4):
-        digest = hashlib.md5(f"aundgrp-{g}-{c}".encode()).digest()
-        order = sorted(range(16), key=lambda b: (digest[b], b))
-        hot.append(sorted(order[:8]))
-    # variant swaps: (chunk, hot_rank, cold_rank) — swap the rank'th
-    # hot band with the rank'th cold band of that chunk
-    swaps = {0: (), 1: ((0, 0, 0),), 2: ((1, 0, 0), (2, 0, 0))}[v]
-    for c, hr, cr in swaps:
-        cold = [b for b in range(16) if b not in hot[c]]
-        hot[c].remove(hot[c][hr])
-        hot[c].append(cold[cr])
-        hot[c].sort()
-    bits = 0
-    for c in range(4):
-        for b in hot[c]:
-            bits |= 1 << (c * 16 + b)
-    return bits
-
-
-def _audio_neardup_check() -> None:
-    """Fixture-design assert: all within-group pair distances <= 6 and
-    every cross-group distance far beyond the radius."""
-    hs = {(g, v): audio_neardup_bits(g, v)
-          for g in range(6) for v in range(3)}
-    for (ka, ha) in hs.items():
-        for (kb, hb) in hs.items():
-            if ka >= kb:
-                continue
-            d = bin(ha ^ hb).count("1")
-            if ka[0] == kb[0]:
-                assert d <= 6, "fixture design drifted (within-group)"
-            else:
-                assert d > 12, "fixture design drifted (cross-group)"
-
-
-def audio_neardup_clip(g: int, v: int) -> np.ndarray:
-    """(8192,) int16 clip whose ``spectral_hash`` is EXACTLY
-    ``audio_neardup_bits(g, v)``: 16 frames of 512 samples, 4 frames
-    per time chunk (chunk edges land on frame edges), and during
-    chunk c a sum of sines at the exact FFT-bin centres (bin 16b+9)
-    of that chunk's hot bands — frame-aligned integer-bin tones leak
-    nothing into cold bands, so hot cells sit ~2x the clip mean and
-    cold cells at the noise floor.  Seeded Gaussian noise (sigma=80,
-    ~50x below a hot tone's band energy) makes each variant a genuine
-    noisy near-dup without flipping any designed bit."""
-    bits = audio_neardup_bits(g, v)
-    n, frame, chunk_len = 8192, 512, 4 * 512
-    t = np.arange(n, dtype=np.float64)
-    sig = np.zeros(n, dtype=np.float64)
-    for c in range(4):
-        sl = slice(c * chunk_len, (c + 1) * chunk_len)
-        for b in range(16):
-            if (bits >> (c * 16 + b)) & 1:
-                k = 16 * b + 9  # centre FFT bin of band b
-                sig[sl] += 2800.0 * np.sin(2 * np.pi * k * t[sl] / frame)
-    rng = np.random.default_rng(1000 * g + v)
-    sig += rng.normal(0.0, 80.0, n)
-    return np.clip(sig, -32768, 32767).astype(np.int16)

@@ -303,25 +303,24 @@ def get_det_boxes(image: np.ndarray, weights: dict, cfg: C.PipelineConfig):
     bbox = bbox_transfor_inv(anchor, regr.astype(np.float64))
     bbox = clip_box(bbox, (h, w))
 
-    fg = np.where(cls_prob[0, :, 1] > cfg.prob_thresh)[0]
+    fg = np.where(cls_prob[0, :, 1] > C.PROB_THRESH)[0]
     select_anchor = bbox[fg, :].astype(np.int32)
     select_score = cls_prob[0, fg, 1]
-    keep_index = filter_bbox(select_anchor, cfg.min_box_size)
+    keep_index = filter_bbox(select_anchor, C.MIN_BOX_SIZE)
     select_anchor = select_anchor[keep_index]
     select_score = select_score[keep_index].reshape(-1, 1)
     if select_anchor.shape[0] == 0:
         return np.zeros((0, 9), dtype=np.float64), image
     nmsbox = np.hstack([select_anchor.astype(np.float64), select_score])
-    keep = nms(nmsbox, cfg.nms_thresh)
+    keep = nms(nmsbox, C.NMS_THRESH)
     select_anchor = select_anchor[keep]
     select_score = select_score[keep]
 
     text = get_text_lines(select_anchor.astype(np.float64),
                           select_score.ravel(), (h, w))
-    if cfg.expand:
-        for idx in range(len(text)):
-            text[idx][0] = max(text[idx][0] - C.EXPAND_X, 0)
-            text[idx][2] = min(text[idx][2] + C.EXPAND_X, w - 1)
-            text[idx][4] = max(text[idx][4] - C.EXPAND_X, 0)
-            text[idx][6] = min(text[idx][6] + C.EXPAND_X, w - 1)
+    for idx in range(len(text)):
+        text[idx][0] = max(text[idx][0] - C.EXPAND_X, 0)
+        text[idx][2] = min(text[idx][2] + C.EXPAND_X, w - 1)
+        text[idx][4] = max(text[idx][4] - C.EXPAND_X, 0)
+        text[idx][6] = min(text[idx][6] + C.EXPAND_X, w - 1)
     return text, image

@@ -1,2 +1,2 @@
 """Spark operators: the OCR extraction pipeline plus the web-scale
-training-data operators (dedup, similarity, text analysis, multimodal)."""
+training-data operators (dedup, similarity, text analysis)."""

@@ -199,7 +199,6 @@ def explode_spans(documents: DataFrame) -> DataFrame:
 
 def ocr_transcripts(images: DataFrame, media_spans: DataFrame,
                     weights_spec, cfg: PipelineConfig,
-                    salt_partitions: int | None = None,
                     timing_acc=None) -> DataFrame:
     """(media_ref, box_order, text) for every distinct needed image."""
     spark = images.sparkSession
@@ -210,9 +209,8 @@ def ocr_transcripts(images: DataFrame, media_spans: DataFrame,
     # variable per-image cost (image widths vary ~3x).  Swept r2 at
     # bench scale (128 imgs, local[32]): 32p=20.6, 64p=25.6, 128p=26.0,
     # 256p=21.0 img/s — the 4-wave default is the measured optimum
-    p = salt_partitions or max(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        4 * spark.sparkContext.defaultParallelism)
+    p = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
+            4 * spark.sparkContext.defaultParallelism)
     # salted repartition: uniform spread of distinct images for the
     # compute-heavy UDF stage (explicit skew-breaker, SURVEY.md §4.3);
     # the explicit partition count marks the shuffle REPARTITION_BY_NUM
@@ -229,10 +227,8 @@ def ocr_errors(transcripts: DataFrame) -> DataFrame:
             .select("media_ref", F.col("text").alias("error")))
 
 
-def extract(documents: DataFrame, images: DataFrame, weights_spec=None,
-            cfg: PipelineConfig | None = None,
-            salt_partitions: int | None = None,
-            timing_acc=None) -> DataFrame:
+def extract(documents: DataFrame, images: DataFrame, weights_spec,
+            cfg: PipelineConfig, timing_acc=None) -> DataFrame:
     """documents(doc_id, spans) x images -> extracted(doc_id, spans).
 
     Text spans pass through untouched; media spans are replaced by their
@@ -240,9 +236,6 @@ def extract(documents: DataFrame, images: DataFrame, weights_spec=None,
     0..n-1 by (source offset, box order).  Per-row invariant vs the
     oracle: span-sequence equality on (kind, text, media_ref, order).
     """
-    cfg = cfg or PipelineConfig.fixture()
-    if weights_spec is None:
-        weights_spec = file_weights_spec()
     spans = explode_spans(documents)
 
     text_spans = (
@@ -257,7 +250,7 @@ def extract(documents: DataFrame, images: DataFrame, weights_spec=None,
     )
 
     transcripts = ocr_transcripts(images, media_spans, weights_spec, cfg,
-                                  salt_partitions, timing_acc)
+                                  timing_acc)
     ocr_spans = (
         media_spans.join(
             transcripts.where(F.col("box_order") != ERROR_BOX_ORDER),

@@ -29,25 +29,19 @@ def sort_box(boxes: np.ndarray) -> np.ndarray:
     return boxes[np.argsort(key, kind="stable")]
 
 
-def char_rec(img: np.ndarray, text_recs: np.ndarray, weights_crnn: dict,
-             adjust: bool = False) -> list[tuple[int, str]]:
+def char_rec(img: np.ndarray, text_recs: np.ndarray,
+             weights_crnn: dict) -> list[tuple[int, str]]:
     """Per-quad rotate-crop + recognition; returns surviving
     (sorted_box_index, transcript) pairs in insertion order — gaps where
-    boxes were filtered (ocr.py:39-71)."""
+    boxes were filtered (ocr.py:39-71).  The reference's ``adjust``
+    widening is off at its only call site (ocr.py:77), so it is not
+    applied."""
     results: list[tuple[int, str]] = []
     x_dim, y_dim = img.shape[1], img.shape[0]
     for index, rec in enumerate(text_recs):
-        xlength = int((rec[6] - rec[0]) * 0.1)
-        ylength = int((rec[7] - rec[1]) * 0.2)
-        if adjust:
-            pt1 = (max(1, rec[0] - xlength), max(1, rec[1] - ylength))
-            pt2 = (rec[2], rec[3])
-            pt3 = (min(rec[6] + xlength, x_dim - 2),
-                   min(y_dim - 2, rec[7] + ylength))
-        else:
-            pt1 = (max(1, rec[0]), max(1, rec[1]))
-            pt2 = (rec[2], rec[3])
-            pt3 = (min(rec[6], x_dim - 2), min(y_dim - 2, rec[7]))
+        pt1 = (max(1, rec[0]), max(1, rec[1]))
+        pt2 = (rec[2], rec[3])
+        pt3 = (min(rec[6], x_dim - 2), min(y_dim - 2, rec[7]))
         degree = math.degrees(math.atan2(pt2[1] - pt1[1], pt2[0] - pt1[0]))
         part = rotate_crop(img, degree, pt1, pt3)
         if part.shape[0] < 1 or part.shape[1] < 1 \
@@ -65,7 +59,7 @@ def ocr_image(image: np.ndarray, weights_ctpn: dict, weights_crnn: dict,
     (ocr.py:73-78)."""
     text_recs, resized = get_det_boxes(image, weights_ctpn, cfg)
     text_recs = sort_box(text_recs)
-    return char_rec(resized, text_recs, weights_crnn, adjust=cfg.adjust)
+    return char_rec(resized, text_recs, weights_crnn)
 
 
 def extract_document(doc: dict, image_for_ref, weights_ctpn: dict,

@@ -207,10 +207,8 @@ def write_stats(spark: SparkSession, dst: str, stats: dict) -> None:
 
 
 def run_extract_job(spark: SparkSession, documents: DataFrame,
-                    images: DataFrame, dst: str,
-                    cfg: PipelineConfig | None = None,
+                    images: DataFrame, dst: str, cfg: PipelineConfig,
                     buckets: int = 32, resume: bool = True,
-                    weights_spec: dict | None = None,
                     data_table: str | None = None) -> dict:
     """Run the extraction into <dst> with bucketed lineage; returns a
     summary dict.  Safe to re-run after any failure: committed buckets
@@ -224,7 +222,6 @@ def run_extract_job(spark: SparkSession, documents: DataFrame,
     writer (sources/tables.write_partitioned) instead of
     ``<dst>/data`` Parquet; lineage/metrics stay at ``<dst>``
     (tests/test_iceberg_native.py)."""
-    cfg = cfg or PipelineConfig.fixture()
     t0 = time.time()
     done, attempts = _lineage_state(spark, dst)
     if not resume:
@@ -244,8 +241,7 @@ def run_extract_job(spark: SparkSession, documents: DataFrame,
         # commit from ONE job, so their wall_ms is the job wall)
         timing_acc = ocr_timing_accumulator(spark)
         out = extract(pending_docs.drop("bucket"), images,
-                      weights_spec or file_weights_spec(), cfg,
-                      timing_acc=timing_acc)
+                      file_weights_spec(), cfg, timing_acc=timing_acc)
         _, wall_ms = _commit(
             spark, out, dst, data_table or os.path.join(dst, "data"),
             buckets, set(per_bucket), attempts, "extract",

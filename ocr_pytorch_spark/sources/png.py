@@ -13,9 +13,8 @@ ingest path is exercised against real inputs from both codecs.
 
 Flow: ``spark.read.format("binaryFile")`` (built-in, splits by file)
 -> Arrow-batched ``mapInPandas`` decode -> (media_ref, height, width,
-channels, data) rows identical to the native image table, so every
-downstream operator (OCR extract, multimodal features, thumbnails)
-works on decoded PNGs unchanged.  Corrupt files follow the K3
+channels, data) rows identical to the native image table, so OCR
+extract works on decoded PNGs unchanged.  Corrupt files follow the K3
 poison-row contract: they become (media_ref, -1, -1, -1, error bytes)
 rows surfaced by ``png_errors`` instead of failing the partition.
 """

@@ -99,15 +99,6 @@ def test_decode_image_dispatch():
         decode_image(b"GIF89a....")
 
 
-def test_decode_codec_jpeg_real():
-    from ocr_pytorch_spark.operators.multimodal import decode_codec
-
-    img = _smooth_img(16, 16)
-    assert decode_codec(encode_jpeg(img), "jpeg").shape == img.shape
-    with pytest.raises(NotImplementedError):
-        decode_codec(b"\x00\x01", "mp3")
-
-
 def test_spark_mixed_codec_ingest(spark):
     """read_image_dir + decode over a dir holding one PNG and one JPEG
     (the checked-in reference files) -> two decoded raw-RGB rows."""
